@@ -97,8 +97,6 @@ case class BoundedTopK(k: Int, child: Expression,
 object BoundedTopK {
   /** Register `graft_topk(k, struct(ord, id))` (idempotent). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_topk",
-      exprs => BoundedTopK(exprs.head.eval().asInstanceOf[Int], exprs(1)),
-      "scala_udf")
+    registerOnce(spark, "graft_topk")(exprs =>
+      BoundedTopK(exprs.head.eval().asInstanceOf[Int], exprs(1)))
 }

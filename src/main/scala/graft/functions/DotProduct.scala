@@ -56,6 +56,5 @@ object DotProduct {
     * Callers then use `expr("graft_dot(a, b)")`.
     */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs.head, exprs(1)), "scala_udf")
+    registerOnce(spark, "graft_dot")(exprs => DotProduct(exprs.head, exprs(1)))
 }

@@ -100,8 +100,7 @@ case class SimHash64(child: Expression)
 object SimHash64 {
   /** Register `graft_simhash(tokens)` (idempotent). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash", exprs => SimHash64(exprs.head), "scala_udf")
+    registerOnce(spark, "graft_simhash")(exprs => SimHash64(exprs.head))
 }
 
 /** Sorted xxhash64 fingerprints of a string array — the cheap set
@@ -145,8 +144,7 @@ case class SortedHashes(child: Expression)
 object SortedHashes {
   /** Register `graft_sorted_hashes(strings)` (idempotent). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sorted_hashes", exprs => SortedHashes(exprs.head), "scala_udf")
+    registerOnce(spark, "graft_sorted_hashes")(exprs => SortedHashes(exprs.head))
 }
 
 /** Intersection size of two SORTED long arrays (one merge walk, no
@@ -178,9 +176,8 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 object SortedIntersectCount {
   /** Register `graft_sorted_intersect(a, b)` (idempotent). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sorted_intersect",
-      exprs => SortedIntersectCount(exprs.head, exprs(1)), "scala_udf")
+    registerOnce(spark, "graft_sorted_intersect")(exprs =>
+      SortedIntersectCount(exprs.head, exprs(1)))
 }
 
 /** Sign-random-projection (SimHash-for-vectors) LSH sketch with
@@ -267,8 +264,7 @@ object RademacherSketch {
 
   /** Register `graft_rademacher(embedding)` (idempotent). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rademacher", exprs => RademacherSketch(exprs.head), "scala_udf")
+    registerOnce(spark, "graft_rademacher")(exprs => RademacherSketch(exprs.head))
 }
 
 /** 126-bit signed-random-projection signature of an embedding — the
@@ -358,8 +354,7 @@ object Srp126 {
 
   /** Register `graft_srp126(embedding)` (idempotent). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_srp126", exprs => Srp126(exprs.head), "scala_udf")
+    registerOnce(spark, "graft_srp126")(exprs => Srp126(exprs.head))
 }
 
 /** True rolling-hash (Rabin–Karp) document fingerprints: polynomial
@@ -426,8 +421,7 @@ object RollingHashes {
 
   /** Register `graft_rolling_hashes(text)` (idempotent). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rolling_hashes", exprs => RollingHashes(exprs.head), "scala_udf")
+    registerOnce(spark, "graft_rolling_hashes")(exprs => RollingHashes(exprs.head))
 }
 
 /** Robust-winnowing document fingerprints (the MOSS selection rule):
@@ -505,8 +499,7 @@ object WinnowedHashes {
 
   /** Register `graft_winnowed_hashes(text)` (idempotent). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_winnowed_hashes", exprs => WinnowedHashes(exprs.head), "scala_udf")
+    registerOnce(spark, "graft_winnowed_hashes")(exprs => WinnowedHashes(exprs.head))
 }
 
 /** 64-permutation MinHash signature of a shingle array.
@@ -568,6 +561,5 @@ object MinHashSig {
 
   /** Register `graft_minhash(shingles)` (idempotent). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash", exprs => MinHashSig(exprs.head), "scala_udf")
+    registerOnce(spark, "graft_minhash")(exprs => MinHashSig(exprs.head))
 }

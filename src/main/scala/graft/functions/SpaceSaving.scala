@@ -128,8 +128,6 @@ case class SpaceSaving(k: Int, child: Expression,
 object SpaceSaving {
   /** Register `graft_spacesaving(k, key)` (idempotent). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_spacesaving",
-      exprs => SpaceSaving(exprs.head.eval().asInstanceOf[Int], exprs(1)),
-      "scala_udf")
+    registerOnce(spark, "graft_spacesaving")(exprs =>
+      SpaceSaving(exprs.head.eval().asInstanceOf[Int], exprs(1)))
 }

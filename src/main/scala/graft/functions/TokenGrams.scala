@@ -48,9 +48,6 @@ case class TokenGrams(child: Expression, n: Int)
 object TokenGrams {
   /** Register `graft_grams(text, n)` (idempotent). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_grams",
-      exprs => TokenGrams(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]),
-      "scala_udf")
+    registerOnce(spark, "graft_grams")(exprs =>
+      TokenGrams(exprs.head, exprs(1).eval().asInstanceOf[Int]))
 }

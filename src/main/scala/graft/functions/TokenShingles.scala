@@ -65,11 +65,8 @@ case class TokenShingles(child: Expression, n: Int)
 object TokenShingles {
   /** Register `graft_shingles(text, n)` (idempotent). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles",
-      exprs => TokenShingles(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]),
-      "scala_udf")
+    registerOnce(spark, "graft_shingles")(exprs =>
+      TokenShingles(exprs.head, exprs(1).eval().asInstanceOf[Int]))
 }
 
 /** The ONE text-normalization contract under the shingle/gram family

@@ -87,6 +87,5 @@ case class UnitVector(child: Expression) extends UnaryExpression {
 object UnitVector {
   /** Register `graft_unit` in the session's function registry (idempotent). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_unit", exprs => UnitVector(exprs.head), "scala_udf")
+    registerOnce(spark, "graft_unit")(exprs => UnitVector(exprs.head))
 }

@@ -66,8 +66,17 @@ object Features {
     * group's exact moments (p = value cents long; n, s, sxx exact).
     */
   private val MeanExpr = "(CAST(s AS DOUBLE) / CAST(n AS DOUBLE))"
+  /** DOUBLE of an exact DECIMAL(38,0) expression, correctly rounded in
+    * BOTH engines: DuckDB's direct DECIMAL→DOUBLE cast can land 1 ulp
+    * off above 2^53 (sxx·n − s² reaches 3.3e19 on small inputs), so
+    * the value is split into its multiple of 2^53 and the remainder,
+    * each exactly representable while |x| < 2^106, and ONE IEEE add
+    * rounds their sum — the same double Spark's direct cast gives.
+    */
+  private def exactDouble(x: String): String =
+    s"(CAST($x - $x % 9007199254740992 AS DOUBLE) + CAST($x % 9007199254740992 AS DOUBLE))"
   private val SdExpr =
-    "sqrt(CAST(sxx * n - s * s AS DOUBLE) / CAST(CAST(n AS DECIMAL(38,0)) * (n - 1) AS DOUBLE))"
+    s"sqrt(${exactDouble("(sxx * n - s * s)")} / ${exactDouble("(CAST(n AS DECIMAL(38,0)) * (n - 1))")})"
   // Degenerate-group gates, shared verbatim with the oracle: a
   // single-row or zero-variance group has sd = 0 and mx = mn, where
   // Spark's non-ANSI divide yields NULL but DuckDB's IEEE semantics

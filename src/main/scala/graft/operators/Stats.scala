@@ -31,6 +31,21 @@ object Stats {
       j <- (i + 1) until EventTypes.size
     } yield (EventTypes(i), EventTypes(j))
 
+  /** Unpivot per-type columns `<col>_<type>` to one row per type pair
+    * with columns `type_a, type_b, <col>_x, <col>_y, …` — the pair
+    * statistics then write their per-pair text once, with `x`/`y` in
+    * place of the type names, instead of 10 copies in one wide row
+    * (10 copies of lepage_test's sums or tost_equivalence's statistics
+    * grew the generated code past the JVM's 64 KB method limit, so
+    * Spark fell back to interpreted execution on every run).
+    */
+  private def stackPairs(df: DataFrame, cols: String*): DataFrame = {
+    val args = TypePairs.map { case (a, b) =>
+      (s"'$a'" +: s"'$b'" +: cols.flatMap(c => Seq(s"${c}_$a", s"${c}_$b"))).mkString(", ") }
+    df.selectExpr(s"stack(${TypePairs.size}, ${args.mkString(", ")})" +
+      cols.flatMap(c => Seq(s"${c}_x", s"${c}_y")).mkString(" AS (type_a, type_b, ", ", ", ")"))
+  }
+
   // ---------------------------------------------------------------- ks_test
 
   /** The per-pair KS statistic over the cumulative count columns —
@@ -41,13 +56,24 @@ object Stats {
     s"max(abs(CAST(f_$a AS DOUBLE)/CAST(n_$a AS DOUBLE)" +
       s" - CAST(f_$b AS DOUBLE)/CAST(n_$b AS DOUBLE)))"
 
-  /** Two-sample Kolmogorov–Smirnov D for every pair of event types
-    * over the `value` distribution — the nonparametric "did the
-    * distribution shift" test (complement of `dist_drift`'s binned
-    * PSI: KS is binless and sup-norm, PSI is binned and averaged).
-    * All 10 pairs come out of ONE pass: per-value counts pivot to a
-    * column per type, one cumulative window turns them into ECDF
-    * numerators, and a single aggregate takes the 10 sup-norms.
+  /** The shared ECDF value grid, stacked one row per (value, type
+    * pair) — ONE definition consumed by every value-grid pair
+    * statistic ([[ksTest]], [[kuiperTest]], [[cliffDelta]],
+    * [[brunnerMunzel]], [[lepageTest]], [[cramerVonMises]]; SQL twin
+    * [[ecdfGridSqlCtes]]), so no two of them can run on subtly
+    * different grids and the cross-operator bounds (V ≥ D,
+    * T ≤ n_a n_b D²/N) stay mathematical facts. Per-value conditional
+    * counts pivot to a column per event type (`c_<type>`), one
+    * cumulative window turns them into ECDF numerators (`f_<type>`)
+    * and, over the whole grid, the per-type totals (`n_<type>`), and
+    * [[stackPairs]] unpivots every grid row into the 10 pairs with
+    * columns `type_a, type_b, c_x, c_y, f_x, f_y, n_x, n_y`.
+    *
+    * Each statistic then writes its per-pair text ONCE with `x`/`y`
+    * in place of the type names (the oracle splices the same
+    * generators with the real names) and aggregates it per pair in
+    * [[pairStats]]: at most 6 sums per pair group instead of one
+    * 10-pair-wide global aggregate of up to 60.
     *
     * Scale shape: the groupBy(value) aggregate reduces the raw log to
     * the VALUE GRID before any window runs — `value` carries 2
@@ -55,40 +81,58 @@ object Stats {
     * corpus size (the dim-build pattern: frame bounded by the domain,
     * not the data). The global-order cumsum is a single task over
     * that bounded grid, never over raw rows; the raw scan is one
-    * map-side conditional-count pass.
+    * map-side conditional-count pass. The stacked frame is 10× the
+    * grid, reduced by a 10-key aggregate in the window's task.
     */
-  /** The shared one-pass ECDF value grid: per-value conditional
-    * counts pivoted to a column per event type, one cumulative window
-    * to ECDF numerators (`f_<type>`), and the per-type totals
-    * (`n_<type>`) — ONE definition consumed by [[ksTest]] and
-    * [[kuiperTest]] (SQL twin [[ecdfGridSqlCtes]]), so the two
-    * sup-norm statistics can never run on subtly different grids and
-    * the cross-operator dominance V ≥ D stays a mathematical fact.
-    */
-  private def ecdfGrid(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+  private def ecdfGrid(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables(spark, dir).events.select(col("event_type"), col("value"))
     val cCols = EventTypes.map(t =>
       sum(when(col("event_type") === t, 1L).otherwise(0L)).as(s"c_$t"))
+    // plus one all-NULL row, which every window sum and every per-pair
+    // sum or max skips: it gives each pair a group even when the event
+    // log is empty, where the oracle's one-row aggregate still yields
+    // all 10 pairs (with NULL statistics)
     val grid = ev.groupBy(col("value")).agg(cCols.head, cCols.tail: _*)
+      .unionByName(spark.range(1).select(lit(null).cast("double").as("value")),
+        allowMissingColumns = true)
     val w = Window.orderBy("value")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = grid.select(
-      col("value") +: EventTypes.map(t => sum(col(s"c_$t")).over(w).as(s"f_$t")): _*)
-    val nCols = EventTypes.map(t => sum(col(s"c_$t")).as(s"n_$t"))
-    val totals = grid.agg(nCols.head, nCols.tail: _*)
-    (cum, totals)
+    val upTo = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val cum = grid.select(EventTypes.map(t => col(s"c_$t")) ++
+      EventTypes.map(t => sum(col(s"c_$t")).over(upTo).as(s"f_$t")) ++
+      EventTypes.map(t => sum(col(s"c_$t")).over(all).as(s"n_$t")): _*)
+    stackPairs(cum, "c", "f", "n")
   }
 
-  /** [[ecdfGrid]]'s SQL twin — the `g`/`f`/`t` CTE prelude both
-    * sup-norm oracles splice in verbatim.
+  /** One output row per type pair: the `sums` (aggregate text, column
+    * name) over the pair's [[ecdfGrid]] rows, then the `outs` select
+    * items over them and the pair's totals `n_x`/`n_y`, ordered by
+    * pair. The grid arrives in one partition (its window needs that),
+    * so the pair aggregate and the final sort run in that same task
+    * with no further shuffle.
     */
-  private def ecdfGridSqlCtes: String = {
+  private def pairStats(spark: SparkSession, dir: String,
+      sums: Seq[(String, String)], outs: String*): DataFrame = {
+    val aggs = sums.map { case (e, name) => expr(e).as(name) }
+    ecdfGrid(spark, dir).groupBy("type_a", "type_b", "n_x", "n_y")
+      .agg(aggs.head, aggs.tail: _*)
+      .selectExpr("type_a" +: "type_b" +: outs: _*)
+      .orderBy("type_a", "type_b")
+  }
+
+  /** [[ecdfGrid]]'s SQL twin — the `g`/`f`/`t` CTE prelude every
+    * value-grid oracle splices in verbatim (`withCounts` keeps the
+    * per-value counts `c_<type>` in `f` next to the ECDF numerators).
+    */
+  private def ecdfGridSqlCtes(withCounts: Boolean): String = {
     val cSums = EventTypes.map(t =>
       s"CAST(sum(CASE WHEN event_type = '$t' THEN 1 ELSE 0 END) AS BIGINT) AS c_$t")
       .mkString(",\n    ")
     val fCums = EventTypes.map(t =>
       s"sum(c_$t) OVER (ORDER BY value ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS f_$t")
       .mkString(",\n    ")
+    val counts =
+      if (withCounts) EventTypes.map(t => s"c_$t").mkString("", ", ", ",\n    ") else ""
     val nTots = EventTypes.map(t => s"CAST(sum(c_$t) AS BIGINT) AS n_$t").mkString(", ")
     s"""g AS (
        |  SELECT value,
@@ -96,21 +140,30 @@ object Stats {
        |  FROM events GROUP BY value),
        |f AS (
        |  SELECT value,
-       |    $fCums
+       |    $counts$fCums
        |  FROM g),
        |t AS (SELECT $nTots FROM g)""".stripMargin
   }
 
-  def ksTest(spark: SparkSession, dir: String): DataFrame = {
-    val (cum, totals) = ecdfGrid(spark, dir)
-    val dCols = TypePairs.map { case (a, b) => expr(ksMaxExpr(a, b)).as(s"d_${a}_$b") }
-    val maxes = cum.crossJoin(broadcast(totals)).agg(dCols.head, dCols.tail: _*)
-    val stackArgs = TypePairs
-      .map { case (a, b) => s"'$a', '$b', d_${a}_$b" }.mkString(", ")
-    maxes.selectExpr(
-        s"stack(${TypePairs.size}, $stackArgs) AS (type_a, type_b, d_stat)")
-      .orderBy("type_a", "type_b")
-  }
+  /** The oracle twin of [[pairStats]]'s sums: every pair's `sums`
+    * with the real type names, as the select list of one wide row.
+    */
+  private def pairSumsSql(sums: (String, String) => Seq[(String, String)]): String =
+    TypePairs.flatMap { case (a, b) => sums(a, b).map { case (e, n) => s"$e AS $n" } }
+      .mkString(",\n    ")
+
+  /** Two-sample Kolmogorov–Smirnov D for every pair of event types
+    * over the `value` distribution — the nonparametric "did the
+    * distribution shift" test (complement of `dist_drift`'s binned
+    * PSI: KS is binless and sup-norm, PSI is binned and averaged).
+    * All 10 pairs come out of ONE pass over the shared [[ecdfGrid]]:
+    * one sup-norm per pair group.
+    *
+    * Scale shape: the [[ecdfGrid]] shape — raw scan → bounded value
+    * grid → 10× stacked grid → one 10-key aggregate.
+    */
+  def ksTest(spark: SparkSession, dir: String): DataFrame =
+    pairStats(spark, dir, Seq(ksMaxExpr("x", "y") -> "d"), "d AS d_stat")
 
   val ksTestSql: String = {
     val dMaxes = TypePairs
@@ -119,7 +172,7 @@ object Stats {
       .map { case (a, b) =>
         s"SELECT '$a' AS type_a, '$b' AS type_b, d_${a}_$b AS d_stat FROM m" }
       .mkString("\nUNION ALL ")
-    s"""WITH $ecdfGridSqlCtes,
+    s"""WITH ${ecdfGridSqlCtes(withCounts = false)},
        |m AS (
        |  SELECT
        |    $dMaxes
@@ -1084,15 +1137,29 @@ object Stats {
     * accumulate as exact integer cents / cents² (the corrExpr
     * discipline — decimal(38,0) products, no float sums anywhere),
     * and t plus the Welch–Satterthwaite df are shared expression
-    * text. One pass builds all five types' moments; the 10 pairs are
-    * a driver-side literal expansion like `ks_test`.
+    * text. One pass builds all five types' moments ([[pairMoments]]),
+    * unpivoted to one row per pair so the text is written once.
     *
     * Scale shape: one map-side conditional-sum pass reduces the raw
-    * log to 5 moment rows; everything after is constant-size. The
-    * n·ss product needs int128/decimal beyond ~2^63 (≈ sf1 for this
+    * log to one moment row, stacked to 10; everything after is
+    * constant-size. The n·ss product needs int128/decimal beyond ~2^63 (≈ sf1 for this
     * events domain) — already decimal(38,0) here.
     */
   def welchTTest(spark: SparkSession, dir: String): DataFrame = {
+    val se2 = s"(${varOverNExpr("x")} + ${varOverNExpr("y")})"
+    pairMoments(spark, dir).selectExpr("type_a", "type_b",
+        s"(${meanExpr("x")} - ${meanExpr("y")}) / sqrt($se2) AS t_stat",
+        s"$se2 * $se2 / ((${varOverNExpr("x")}) * (${varOverNExpr("x")}) / CAST(n_x - 1 AS DOUBLE)" +
+          s" + (${varOverNExpr("y")}) * (${varOverNExpr("y")}) / CAST(n_y - 1 AS DOUBLE)) AS welch_df")
+      .orderBy("type_a", "type_b")
+  }
+
+  /** The per-type exact cent moments (`n`, `s` = Σc, `ss` = Σc²) of
+    * one conditional-sum pass over the events, unpivoted by
+    * [[stackPairs]] to one row per type pair — the shared frame of
+    * [[welchTTest]] and [[tostEquivalence]].
+    */
+  private def pairMoments(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables(spark, dir).events
       .select(col("event_type"), expr("CAST(round(value * 100) AS BIGINT)").as("c"))
     val mCols = EventTypes.flatMap { t =>
@@ -1100,20 +1167,7 @@ object Stats {
         sum(when(col("event_type") === t, col("c")).otherwise(0L)).as(s"s_$t"),
         sum(when(col("event_type") === t, col("c") * col("c")).otherwise(0L)).as(s"ss_$t"))
     }
-    val moments = ev.agg(mCols.head, mCols.tail: _*)
-    val outCols = TypePairs.flatMap { case (a, b) =>
-      val se2 = s"(${varOverNExpr(a)} + ${varOverNExpr(b)})"
-      Seq(
-        expr(s"(${meanExpr(a)} - ${meanExpr(b)}) / sqrt($se2)").as(s"t_${a}_$b"),
-        expr(s"$se2 * $se2 / ((${varOverNExpr(a)}) * (${varOverNExpr(a)}) / CAST(n_$a - 1 AS DOUBLE)" +
-          s" + (${varOverNExpr(b)}) * (${varOverNExpr(b)}) / CAST(n_$b - 1 AS DOUBLE))").as(s"df_${a}_$b"))
-    }
-    val wide = moments.select(outCols: _*)
-    val stackArgs = TypePairs
-      .map { case (a, b) => s"'$a', '$b', t_${a}_$b, df_${a}_$b" }.mkString(", ")
-    wide.selectExpr(
-        s"stack(${TypePairs.size}, $stackArgs) AS (type_a, type_b, t_stat, welch_df)")
-      .orderBy("type_a", "type_b")
+    stackPairs(ev.agg(mCols.head, mCols.tail: _*), "n", "s", "ss")
   }
 
   val welchTTestSql: String = {
@@ -7314,32 +7368,20 @@ object Stats {
 
   /** Two-sample Kuiper test for every pair of event types over the
     * `value` distribution: V = D⁺ + D⁻, both one-sided sup-norms of
-    * the ECDF difference. Same one-pass value-grid machinery as
-    * [[ksTest]] (per-value counts → one cumulative window → a single
-    * aggregate takes all 2×10 sup-norms); the two maxima are exact
-    * doubles of exact-integer ratios, and their sum is one IEEE add —
+    * the ECDF difference. Same shared [[ecdfGrid]] as [[ksTest]] (two
+    * sup-norms per pair group); the two maxima are exact doubles of
+    * exact-integer ratios, and their sum is one IEEE add —
     * bit-identical across engines.
     *
     * Scale shape: identical to [[ksTest]] — the cumsum runs over the
     * bounded value grid (≤ ~50k rows at any corpus size), the raw
-    * scan is one map-side conditional-count pass.
+    * scan is one map-side conditional-count pass, the stacked grid is
+    * 10× that, reduced by a 10-key aggregate.
     */
-  def kuiperTest(spark: SparkSession, dir: String): DataFrame = {
-    val (cum, totals) = ecdfGrid(spark, dir)
-    val dCols = TypePairs.flatMap { case (a, b) =>
-      Seq(expr(kuiperUpExpr(a, b)).as(s"dp_${a}_$b"),
-        expr(kuiperDownExpr(a, b)).as(s"dm_${a}_$b"))
-    }
-    val maxes = cum.crossJoin(broadcast(totals)).agg(dCols.head, dCols.tail: _*)
-    val stackArgs = TypePairs
-      .map { case (a, b) =>
-        s"'$a', '$b', dp_${a}_$b, dm_${a}_$b, dp_${a}_$b + dm_${a}_$b" }
-      .mkString(", ")
-    maxes.selectExpr(
-        s"stack(${TypePairs.size}, $stackArgs)" +
-          " AS (type_a, type_b, d_plus, d_minus, v_stat)")
-      .orderBy("type_a", "type_b")
-  }
+  def kuiperTest(spark: SparkSession, dir: String): DataFrame =
+    pairStats(spark, dir,
+      Seq(kuiperUpExpr("x", "y") -> "dp", kuiperDownExpr("x", "y") -> "dm"),
+      "dp AS d_plus", "dm AS d_minus", "dp + dm AS v_stat")
 
   val kuiperTestSql: String = {
     val dMaxes = TypePairs
@@ -7352,7 +7394,7 @@ object Stats {
         s"SELECT '$a' AS type_a, '$b' AS type_b, dp_${a}_$b AS d_plus, " +
           s"dm_${a}_$b AS d_minus, dp_${a}_$b + dm_${a}_$b AS v_stat FROM m" }
       .mkString("\nUNION ALL ")
-    s"""WITH $ecdfGridSqlCtes,
+    s"""WITH ${ecdfGridSqlCtes(withCounts = false)},
        |m AS (
        |  SELECT
        |    $dMaxes
@@ -8262,70 +8304,31 @@ object Stats {
     * that [[mannWhitney]]'s U rescales to (δ = 2U/(n₁n₂) − 1 with
     * ties counted half), reported directly so "how big is the shift"
     * rides next to [[ksTest]]'s "is there a shift". All 10 pairs come
-    * out of the one value-grid pass: per-value counts per type, one
-    * cumulative window, then greater/less cross-mass sums
-    * Σ_v c_a(v)·F_b(v⁻) and Σ_v c_a(v)·(n_b − F_b(v)) — exact longs
-    * (≤ n_a·n_b), one shared double expression per pair.
+    * out of the shared [[ecdfGrid]]: greater/less cross-mass sums
+    * Σ_v c_a(v)·F_b(v⁻) and Σ_v c_a(v)·(n_b − F_b(v)) per pair group —
+    * exact longs (≤ n_a·n_b), one shared double expression per pair.
     *
-    * Scale shape: the [[ksTest]] shape — the raw scan reduces to the
-    * bounded value grid before the window; the pair sums are one
-    * aggregate over that grid.
+    * Scale shape: the [[ecdfGrid]] shape — raw scan → bounded value
+    * grid → 10× stacked grid → one 10-key aggregate of 2 sums.
     */
-  def cliffDelta(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables(spark, dir).events.select(col("event_type"), col("value"))
-    val cCols = EventTypes.map(t =>
-      sum(when(col("event_type") === t, 1L).otherwise(0L)).as(s"c_$t"))
-    val grid = ev.groupBy(col("value")).agg(cCols.head, cCols.tail: _*)
-    val wv = Window.orderBy("value")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = grid.select(
-      (EventTypes.map(t => col(s"c_$t")) ++
-        EventTypes.map(t => sum(col(s"c_$t")).over(wv).as(s"f_$t"))): _*)
-    val nCols = EventTypes.map(t => sum(col(s"c_$t")).as(s"n_$t"))
-    val totals = grid.agg(nCols.head, nCols.tail: _*)
-    val pairCols = TypePairs.flatMap { case (a, b) => Seq(
-      sum(col(s"c_$a") * (col(s"f_$b") - col(s"c_$b"))).as(s"gt_${a}_$b"),
-      sum(col(s"c_$a") * (col(s"n_$b") - col(s"f_$b"))).as(s"lt_${a}_$b")) }
-    val m = cum.crossJoin(broadcast(totals))
-      .agg(pairCols.head, pairCols.tail: _*)
-      .crossJoin(broadcast(totals))
-    val stackArgs = TypePairs
-      .map { case (a, b) =>
-        s"'$a', '$b', CAST(n_$a AS BIGINT), CAST(n_$b AS BIGINT), ${cliffDeltaExpr(a, b)}" }
-      .mkString(", ")
-    m.selectExpr(
-        s"stack(${TypePairs.size}, $stackArgs)" +
-          " AS (type_a, type_b, n_a, n_b, delta)")
-      .orderBy("type_a", "type_b")
-  }
+  def cliffDelta(spark: SparkSession, dir: String): DataFrame =
+    pairStats(spark, dir, cliffSums("x", "y"),
+      "CAST(n_x AS BIGINT) AS n_a", "CAST(n_y AS BIGINT) AS n_b",
+      s"${cliffDeltaExpr("x", "y")} AS delta")
+
+  /** (sum text, column name) of the greater/less cross masses. */
+  private def cliffSums(a: String, b: String): Seq[(String, String)] = Seq(
+    s"sum(c_$a * (f_$b - c_$b))" -> s"gt_${a}_$b",
+    s"sum(c_$a * (n_$b - f_$b))" -> s"lt_${a}_$b")
 
   lazy val cliffDeltaSql: String = {
-    val cSums = EventTypes.map(t =>
-      s"CAST(sum(CASE WHEN event_type = '$t' THEN 1 ELSE 0 END) AS BIGINT) AS c_$t")
-      .mkString(",\n    ")
-    val fCums = EventTypes.map(t =>
-      s"sum(c_$t) OVER (ORDER BY value ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS f_$t")
-      .mkString(",\n    ")
-    val nTots = EventTypes.map(t => s"CAST(sum(c_$t) AS BIGINT) AS n_$t").mkString(", ")
-    val pairSums = TypePairs.flatMap { case (a, b) => Seq(
-      s"sum(c_$a * (f_$b - c_$b)) AS gt_${a}_$b",
-      s"sum(c_$a * (n_$b - f_$b)) AS lt_${a}_$b") }
-      .mkString(",\n    ")
+    val pairSums = pairSumsSql(cliffSums)
     val unions = TypePairs
       .map { case (a, b) =>
         s"SELECT '$a' AS type_a, '$b' AS type_b, CAST(n_$a AS BIGINT) AS n_a," +
           s" CAST(n_$b AS BIGINT) AS n_b, ${cliffDeltaExpr(a, b)} AS delta FROM m, t" }
       .mkString("\nUNION ALL ")
-    s"""WITH g AS (
-       |  SELECT value,
-       |    $cSums
-       |  FROM events GROUP BY value),
-       |f AS (
-       |  SELECT value,
-       |    ${EventTypes.map(t => s"c_$t").mkString(", ")},
-       |    $fCums
-       |  FROM g),
-       |t AS (SELECT $nTots FROM g),
+    s"""WITH ${ecdfGridSqlCtes(withCounts = true)},
        |m AS (
        |  SELECT
        |    $pairSums
@@ -8342,7 +8345,7 @@ object Stats {
     * `brunner.munzel.test` formulation) — one text per pair for both
     * engines.
     */
-  private def bmExprs(a: String, b: String): (String, String, String) = {
+  private def bmExprs(a: String, b: String): (String, String) = {
     // the sum columns are keyed by the pair tag; the COUNT columns by
     // the bare type name (they come off the shared totals row)
     def mean(g: String) = {
@@ -8363,7 +8366,7 @@ object Stats {
         s" / ((CAST(n_$a AS DOUBLE) + CAST(n_$b AS DOUBLE))" +
         s" * sqrt(CAST(n_$a AS DOUBLE) * ${v(a)}" +
         s" + CAST(n_$b AS DOUBLE) * ${v(b)})))"
-    (phat, stat, mean(a))
+    (phat, stat)
   }
 
   /** Brunner–Munzel test for every event-type pair over the `value`
@@ -8371,7 +8374,7 @@ object Stats {
     * [[mannWhitney]] (MW assumes equal shapes under H₀; BM
     * studentizes the rank means with per-group rank variances, the
     * recommended default when spreads differ). Everything reduces to
-    * the one value-grid pass: for a member at value v, the COMBINED
+    * the shared [[ecdfGrid]]: for a member at value v, the COMBINED
     * doubled midrank 2R = 2(F_a⁻+F_b⁻) + c_a+c_b + 1 and the
     * WITHIN-group doubled midrank 2R_w = 2F_g⁻ + c_g + 1 come off the
     * same cumulative columns, so the group rank means and the
@@ -8381,85 +8384,44 @@ object Stats {
     * per output column. Reports the relative effect
     * p̂ = P(X_b > X_a) + ½P(X_b = X_a) and the studentized statistic.
     *
-    * Scale shape: the [[ksTest]] shape — raw scan → bounded value
-    * grid → one aggregate; 10 pairs from one pass.
+    * Scale shape: the [[ecdfGrid]] shape — raw scan → bounded value
+    * grid → 10× stacked grid → one 10-key aggregate of 6 sums.
     */
   def brunnerMunzel(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables(spark, dir).events.select(col("event_type"), col("value"))
-    val cCols = EventTypes.map(t =>
-      sum(when(col("event_type") === t, 1L).otherwise(0L)).as(s"c_$t"))
-    val grid = ev.groupBy(col("value")).agg(cCols.head, cCols.tail: _*)
-    val wv = Window.orderBy("value")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = grid.select(
-      (EventTypes.map(t => col(s"c_$t")) ++
-        EventTypes.map(t => sum(col(s"c_$t")).over(wv).as(s"f_$t"))): _*)
-    val nCols = EventTypes.map(t => sum(col(s"c_$t")).as(s"n_$t"))
-    val totals = grid.agg(nCols.head, nCols.tail: _*)
-    // per-pair per-row doubled midranks, then conditional exact sums
-    def r2c(a: String, b: String) =
-      s"(2 * ((f_$a - c_$a) + (f_$b - c_$b)) + c_$a + c_$b + 1)"
+    val (phat, stat) = bmExprs("x", "y")
+    pairStats(spark, dir, bmSums("x", "y"),
+      "CAST(n_x AS BIGINT) AS n_a", "CAST(n_y AS BIGINT) AS n_b",
+      s"$phat AS p_hat", s"$stat AS bm_stat")
+  }
+
+  /** (sum text, column name) of the per-pair doubled-midrank sums:
+    * for each group g of the pair, Σc_g·2R, Σc_g·d and Σc_g·d² with
+    * d = 2R − 2R_w (combined minus within-group doubled midrank).
+    */
+  private def bmSums(a: String, b: String): Seq[(String, String)] = {
+    val r2c = s"(2 * ((f_$a - c_$a) + (f_$b - c_$b)) + c_$a + c_$b + 1)"
     def r2w(g: String) = s"(2 * (f_$g - c_$g) + c_$g + 1)"
-    val pairCols = TypePairs.flatMap { case (a, b) =>
-      Seq(a, b).flatMap { g =>
-        val d = s"(${r2c(a, b)} - ${r2w(g)})"
-        val tag = s"${g}_in_${a}_$b"
-        Seq(
-          sum(expr(s"CAST(c_$g * ${r2c(a, b)} AS DECIMAL(38,0))")).as(s"src_$tag"),
-          sum(expr(s"CAST(c_$g * $d AS DECIMAL(38,0))")).as(s"sd_$tag"),
-          // c·d stays BIGINT, then ONE (19,0)×int multiply — width 37,
-          // exact on BOTH engines (a (38,0)×int product silently falls
-          // back to DOUBLE in DuckDB; see the round-11 width ledger)
-          sum(expr(s"CAST(c_$g * $d AS DECIMAL(19,0)) * $d")).as(s"sd2_$tag"))
-      }
+    Seq(a, b).flatMap { g =>
+      val d = s"($r2c - ${r2w(g)})"
+      val tag = s"${g}_in_${a}_$b"
+      Seq(
+        s"sum(CAST(c_$g * $r2c AS DECIMAL(38,0)))" -> s"src_$tag",
+        s"sum(CAST(c_$g * $d AS DECIMAL(38,0)))" -> s"sd_$tag",
+        // c·d stays BIGINT, then ONE (19,0)×int multiply — width 37,
+        // exact on BOTH engines (a (38,0)×int product silently falls
+        // back to DOUBLE in DuckDB; see the round-11 width ledger)
+        s"sum(CAST(c_$g * $d AS DECIMAL(19,0)) * $d)" -> s"sd2_$tag")
     }
-    val m = cum.agg(pairCols.head, pairCols.tail: _*).crossJoin(broadcast(totals))
-    val stackArgs = TypePairs.map { case (a, b) =>
-      val (phat, stat, _) = bmExprs(a, b)
-      s"'$a', '$b', CAST(n_$a AS BIGINT), CAST(n_$b AS BIGINT), $phat, $stat"
-    }.mkString(", ")
-    m.selectExpr(
-        s"stack(${TypePairs.size}, $stackArgs)" +
-          " AS (type_a, type_b, n_a, n_b, p_hat, bm_stat)")
-      .orderBy("type_a", "type_b")
   }
 
   lazy val brunnerMunzelSql: String = {
-    val cSums = EventTypes.map(t =>
-      s"CAST(sum(CASE WHEN event_type = '$t' THEN 1 ELSE 0 END) AS BIGINT) AS c_$t")
-      .mkString(",\n    ")
-    val fCums = EventTypes.map(t =>
-      s"sum(c_$t) OVER (ORDER BY value ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS f_$t")
-      .mkString(",\n    ")
-    val nTots = EventTypes.map(t => s"CAST(sum(c_$t) AS BIGINT) AS n_$t").mkString(", ")
-    def r2c(a: String, b: String) =
-      s"(2 * ((f_$a - c_$a) + (f_$b - c_$b)) + c_$a + c_$b + 1)"
-    def r2w(g: String) = s"(2 * (f_$g - c_$g) + c_$g + 1)"
-    val pairSums = TypePairs.flatMap { case (a, b) =>
-      Seq(a, b).flatMap { g =>
-        val d = s"(${r2c(a, b)} - ${r2w(g)})"
-        val tag = s"${g}_in_${a}_$b"
-        Seq(
-          s"sum(CAST(c_$g * ${r2c(a, b)} AS DECIMAL(38,0))) AS src_$tag",
-          s"sum(CAST(c_$g * $d AS DECIMAL(38,0))) AS sd_$tag",
-          s"sum(CAST(c_$g * $d AS DECIMAL(19,0)) * $d) AS sd2_$tag")
-      }
-    }.mkString(",\n    ")
+    val pairSums = pairSumsSql(bmSums)
     val unions = TypePairs.map { case (a, b) =>
-      val (phat, stat, _) = bmExprs(a, b)
+      val (phat, stat) = bmExprs(a, b)
       s"SELECT '$a' AS type_a, '$b' AS type_b, CAST(n_$a AS BIGINT) AS n_a," +
         s" CAST(n_$b AS BIGINT) AS n_b, $phat AS p_hat, $stat AS bm_stat FROM m, t"
     }.mkString("\nUNION ALL ")
-    s"""WITH g AS (
-       |  SELECT value,
-       |    $cSums
-       |  FROM events GROUP BY value),
-       |f AS (
-       |  SELECT value,
-       |    ${EventTypes.map(t => s"c_$t").mkString(", ")},
-       |    $fCums
-       |  FROM g),
-       |t AS (SELECT $nTots FROM g),
+    s"""WITH ${ecdfGridSqlCtes(withCounts = true)},
        |m AS (
        |  SELECT
        |    $pairSums
@@ -8564,7 +8526,7 @@ object Stats {
     * OR change spread", the two-degree-of-freedom screen that catches
     * what a pure location test ([[mannWhitney]]/[[brunnerMunzel]])
     * and a pure dispersion read each miss alone. Both components ride
-    * the one value-grid pass with DOUBLED midranks (the
+    * the shared [[ecdfGrid]] with DOUBLED midranks (the
     * [[brunnerMunzel]] device, exact integers under ties): Wilcoxon
     * scores are the combined doubled midranks 2R̄, Ansari–Bradley
     * scores their fold toward the extremes min(2R̄, 2(N+1)−2R̄); each z
@@ -8573,43 +8535,31 @@ object Stats {
     * sum an exact decimal (Σc·S² via the ONE (19,0)×int multiply of
     * the BM width ledger), one shared double expression per output.
     *
-    * Scale shape: the [[ksTest]] shape — raw scan → bounded value
-    * grid → one aggregate; 10 pairs from one pass.
+    * Scale shape: the [[ecdfGrid]] shape — raw scan → bounded value
+    * grid → 10× stacked grid → one 10-key aggregate of 6 sums.
     */
   def lepageTest(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables(spark, dir).events.select(col("event_type"), col("value"))
-    val cCols = EventTypes.map(t =>
-      sum(when(col("event_type") === t, 1L).otherwise(0L)).as(s"c_$t"))
-    val grid = ev.groupBy(col("value")).agg(cCols.head, cCols.tail: _*)
-    val wv = Window.orderBy("value")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = grid.select(
-      (EventTypes.map(t => col(s"c_$t")) ++
-        EventTypes.map(t => sum(col(s"c_$t")).over(wv).as(s"f_$t"))): _*)
-    val nCols = EventTypes.map(t => sum(col(s"c_$t")).as(s"n_$t"))
-    val totals = grid.agg(nCols.head, nCols.tail: _*)
-    val pairCols = TypePairs.flatMap { case (a, b) =>
-      val (r2, s2) = lepScores(a, b)
-      val tag = s"${a}_$b"
-      Seq(
-        sum(expr(s"CAST(c_$a * $r2 AS DECIMAL(38,0))")).as(s"w_$tag"),
-        sum(expr(s"CAST(c_$a * $s2 AS DECIMAL(38,0))")).as(s"aa_$tag"),
-        sum(expr(s"CAST((c_$a + c_$b) * $r2 AS DECIMAL(38,0))")).as(s"tr1_$tag"),
-        sum(expr(s"CAST((c_$a + c_$b) * $r2 AS DECIMAL(19,0)) * $r2")).as(s"tr2_$tag"),
-        sum(expr(s"CAST((c_$a + c_$b) * $s2 AS DECIMAL(38,0))")).as(s"us1_$tag"),
-        sum(expr(s"CAST((c_$a + c_$b) * $s2 AS DECIMAL(19,0)) * $s2")).as(s"us2_$tag"))
-    }
-    val m = cum.crossJoin(broadcast(totals)).agg(pairCols.head, pairCols.tail: _*)
-      .crossJoin(broadcast(totals))
-    val stackArgs = TypePairs.map { case (a, b) =>
-      val (zw, za) = lepZ(a, b)
-      s"'$a', '$b', CAST(n_$a AS BIGINT), CAST(n_$b AS BIGINT), $zw, $za, " +
-        s"($zw) * ($zw) + ($za) * ($za)"
-    }.mkString(", ")
-    m.selectExpr(
-        s"stack(${TypePairs.size}, $stackArgs)" +
-          " AS (type_a, type_b, n_a, n_b, z_wilcoxon, z_ansari, lepage_stat)")
-      .orderBy("type_a", "type_b")
+    val (zw, za) = lepZ("x", "y")
+    pairStats(spark, dir, lepSums("x", "y"),
+      "CAST(n_x AS BIGINT) AS n_a", "CAST(n_y AS BIGINT) AS n_b",
+      s"$zw AS z_wilcoxon", s"$za AS z_ansari",
+      s"($zw) * ($zw) + ($za) * ($za) AS lepage_stat")
+  }
+
+  /** (sum text, column name) of the six exact per-pair sums: the
+    * Wilcoxon and Ansari–Bradley score sums of group a, and the
+    * pooled score sums and squared-score sums both z's standardize by.
+    */
+  private def lepSums(a: String, b: String): Seq[(String, String)] = {
+    val (r2, s2) = lepScores(a, b)
+    val tag = s"${a}_$b"
+    Seq(
+      s"sum(CAST(c_$a * $r2 AS DECIMAL(38,0)))" -> s"w_$tag",
+      s"sum(CAST(c_$a * $s2 AS DECIMAL(38,0)))" -> s"aa_$tag",
+      s"sum(CAST((c_$a + c_$b) * $r2 AS DECIMAL(38,0)))" -> s"tr1_$tag",
+      s"sum(CAST((c_$a + c_$b) * $r2 AS DECIMAL(19,0)) * $r2)" -> s"tr2_$tag",
+      s"sum(CAST((c_$a + c_$b) * $s2 AS DECIMAL(38,0)))" -> s"us1_$tag",
+      s"sum(CAST((c_$a + c_$b) * $s2 AS DECIMAL(19,0)) * $s2)" -> s"us2_$tag")
   }
 
   /** (doubled combined midrank, doubled Ansari–Bradley score) for the
@@ -8639,40 +8589,14 @@ object Stats {
   }
 
   lazy val lepageTestSql: String = {
-    val cSums = EventTypes.map(t =>
-      s"CAST(sum(CASE WHEN event_type = '$t' THEN 1 ELSE 0 END) AS BIGINT) AS c_$t")
-      .mkString(",\n    ")
-    val fCums = EventTypes.map(t =>
-      s"sum(c_$t) OVER (ORDER BY value ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS f_$t")
-      .mkString(",\n    ")
-    val nTots = EventTypes.map(t => s"CAST(sum(c_$t) AS BIGINT) AS n_$t").mkString(", ")
-    val pairSums = TypePairs.flatMap { case (a, b) =>
-      val (r2, s2) = lepScores(a, b)
-      val tag = s"${a}_$b"
-      Seq(
-        s"sum(CAST(c_$a * $r2 AS DECIMAL(38,0))) AS w_$tag",
-        s"sum(CAST(c_$a * $s2 AS DECIMAL(38,0))) AS aa_$tag",
-        s"sum(CAST((c_$a + c_$b) * $r2 AS DECIMAL(38,0))) AS tr1_$tag",
-        s"sum(CAST((c_$a + c_$b) * $r2 AS DECIMAL(19,0)) * $r2) AS tr2_$tag",
-        s"sum(CAST((c_$a + c_$b) * $s2 AS DECIMAL(38,0))) AS us1_$tag",
-        s"sum(CAST((c_$a + c_$b) * $s2 AS DECIMAL(19,0)) * $s2) AS us2_$tag")
-    }.mkString(",\n    ")
+    val pairSums = pairSumsSql(lepSums)
     val unions = TypePairs.map { case (a, b) =>
       val (zw, za) = lepZ(a, b)
       s"SELECT '$a' AS type_a, '$b' AS type_b, CAST(n_$a AS BIGINT) AS n_a," +
         s" CAST(n_$b AS BIGINT) AS n_b, $zw AS z_wilcoxon, $za AS z_ansari," +
         s" ($zw) * ($zw) + ($za) * ($za) AS lepage_stat FROM m, t"
     }.mkString("\nUNION ALL ")
-    s"""WITH g AS (
-       |  SELECT value,
-       |    $cSums
-       |  FROM events GROUP BY value),
-       |f AS (
-       |  SELECT value,
-       |    ${EventTypes.map(t => s"c_$t").mkString(", ")},
-       |    $fCums
-       |  FROM g),
-       |t AS (SELECT $nTots FROM g),
+    s"""WITH ${ecdfGridSqlCtes(withCounts = true)},
        |m AS (
        |  SELECT
        |    $pairSums
@@ -8838,25 +8762,14 @@ object Stats {
     * moment frame as Welch, two shared-text statistics per pair.
     *
     * Scale shape: ONE conditional-moment aggregate row over the
-    * events scan; the 10-pair spine is literal.
+    * events scan ([[pairMoments]]), stacked to one row per pair.
     */
   def tostEquivalence(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables(spark, dir).events
-      .select(col("event_type"), expr("CAST(round(value * 100) AS BIGINT)").as("c"))
-    val mCols = EventTypes.flatMap { t =>
-      Seq(sum(when(col("event_type") === t, 1L).otherwise(0L)).as(s"n_$t"),
-        sum(when(col("event_type") === t, col("c")).otherwise(0L)).as(s"s_$t"),
-        sum(when(col("event_type") === t, col("c") * col("c")).otherwise(0L)).as(s"ss_$t"))
-    }
-    val moments = ev.agg(mCols.head, mCols.tail: _*)
-    val stackArgs = TypePairs.map { case (a, b) =>
-      val (diff, marg, tl, tu) = tostExprs(a, b)
-      s"'$a', '$b', $diff, $marg, $tl, $tu, " +
-        s"CASE WHEN $tl > CAST(1.645 AS DOUBLE) AND $tu < CAST(-1.645 AS DOUBLE) THEN 1 ELSE 0 END"
-    }.mkString(", ")
-    moments.selectExpr(
-        s"stack(${TypePairs.size}, $stackArgs)" +
-          " AS (type_a, type_b, mean_diff, margin, t_lower, t_upper, equivalent)")
+    val (diff, marg, tl, tu) = tostExprs("x", "y")
+    pairMoments(spark, dir).selectExpr("type_a", "type_b",
+        s"$diff AS mean_diff", s"$marg AS margin", s"$tl AS t_lower", s"$tu AS t_upper",
+        s"CASE WHEN $tl > CAST(1.645 AS DOUBLE) AND $tu < CAST(-1.645 AS DOUBLE) THEN 1 ELSE 0 END" +
+          " AS equivalent")
       .orderBy("type_a", "type_b")
   }
 
@@ -9137,68 +9050,34 @@ object Stats {
     * INTEGRATED-squared companion to [[ksTest]]'s sup-norm D and
     * [[kuiperTest]]'s V (a distribution that drifts a little
     * everywhere moves T while barely moving D; pooled point mass w_v
-    * weights the grid exactly as ranks would). Same one-pass bounded
-    * value grid; the squared-difference integral reduces to three
+    * weights the grid exactly as ranks would). Same shared
+    * [[ecdfGrid]]; the squared-difference integral reduces to three
     * exact decimal moments per pair — see [[cvmExpr]] for the width
     * discipline.
     *
-    * Scale shape: the [[ksTest]] shape — raw scan → bounded grid →
-    * one 30-moment aggregate. Per-row products stay ≤ (19,0)×int
-    * (exact to ~10⁹ rows/type); the moment sums are exact decimals at
-    * any scale.
+    * Scale shape: the [[ecdfGrid]] shape — raw scan → bounded grid →
+    * 10× stacked grid → one 10-key aggregate of 3 moments. Per-row
+    * products stay ≤ (19,0)×int (exact to ~10⁹ rows/type); the moment
+    * sums are exact decimals at any scale.
     */
-  def cramerVonMises(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables(spark, dir).events.select(col("event_type"), col("value"))
-    val cCols = EventTypes.map(t =>
-      sum(when(col("event_type") === t, 1L).otherwise(0L)).as(s"c_$t"))
-    val grid = ev.groupBy(col("value")).agg(cCols.head, cCols.tail: _*)
-    val wv = Window.orderBy("value")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = grid.select(
-      (EventTypes.map(t => col(s"c_$t")) ++
-        EventTypes.map(t => sum(col(s"c_$t")).over(wv).as(s"f_$t"))): _*)
-    val nCols = EventTypes.map(t => sum(col(s"c_$t")).as(s"n_$t"))
-    val totals = grid.agg(nCols.head, nCols.tail: _*)
-    val momCols = TypePairs.flatMap { case (a, b) => Seq(
-      sum(expr(s"CAST((c_$a + c_$b) * f_$a AS DECIMAL(19,0)) * f_$a")).as(s"ma_${a}_$b"),
-      sum(expr(s"CAST((c_$a + c_$b) * f_$a AS DECIMAL(19,0)) * f_$b")).as(s"mb_${a}_$b"),
-      sum(expr(s"CAST((c_$a + c_$b) * f_$b AS DECIMAL(19,0)) * f_$b")).as(s"mc_${a}_$b")) }
-    val m = cum.agg(momCols.head, momCols.tail: _*).crossJoin(broadcast(totals))
-    val stackArgs = TypePairs.map { case (a, b) =>
-      s"'$a', '$b', CAST(n_$a AS BIGINT), CAST(n_$b AS BIGINT), ${cvmExpr(a, b)}"
-    }.mkString(", ")
-    m.selectExpr(
-        s"stack(${TypePairs.size}, $stackArgs) AS (type_a, type_b, n_a, n_b, cvm_stat)")
-      .orderBy("type_a", "type_b")
-  }
+  def cramerVonMises(spark: SparkSession, dir: String): DataFrame =
+    pairStats(spark, dir, cvmSums("x", "y"),
+      "CAST(n_x AS BIGINT) AS n_a", "CAST(n_y AS BIGINT) AS n_b",
+      s"${cvmExpr("x", "y")} AS cvm_stat")
+
+  /** (sum text, column name) of the three exact grid moments A, B, C. */
+  private def cvmSums(a: String, b: String): Seq[(String, String)] = Seq(
+    s"sum(CAST((c_$a + c_$b) * f_$a AS DECIMAL(19,0)) * f_$a)" -> s"ma_${a}_$b",
+    s"sum(CAST((c_$a + c_$b) * f_$a AS DECIMAL(19,0)) * f_$b)" -> s"mb_${a}_$b",
+    s"sum(CAST((c_$a + c_$b) * f_$b AS DECIMAL(19,0)) * f_$b)" -> s"mc_${a}_$b")
 
   lazy val cramerVonMisesSql: String = {
-    val cSums = EventTypes.map(t =>
-      s"CAST(sum(CASE WHEN event_type = '$t' THEN 1 ELSE 0 END) AS BIGINT) AS c_$t")
-      .mkString(",\n    ")
-    val fCums = EventTypes.map(t =>
-      s"sum(c_$t) OVER (ORDER BY value ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS f_$t")
-      .mkString(",\n    ")
-    val nTots = EventTypes.map(t => s"CAST(sum(c_$t) AS BIGINT) AS n_$t").mkString(", ")
-    val momSums = TypePairs.flatMap { case (a, b) => Seq(
-      s"sum(CAST((c_$a + c_$b) * f_$a AS DECIMAL(19,0)) * f_$a) AS ma_${a}_$b",
-      s"sum(CAST((c_$a + c_$b) * f_$a AS DECIMAL(19,0)) * f_$b) AS mb_${a}_$b",
-      s"sum(CAST((c_$a + c_$b) * f_$b AS DECIMAL(19,0)) * f_$b) AS mc_${a}_$b") }
-      .mkString(",\n    ")
+    val momSums = pairSumsSql(cvmSums)
     val unions = TypePairs.map { case (a, b) =>
       s"SELECT '$a' AS type_a, '$b' AS type_b, CAST(n_$a AS BIGINT) AS n_a," +
         s" CAST(n_$b AS BIGINT) AS n_b, ${cvmExpr(a, b)} AS cvm_stat FROM m, t" }
       .mkString("\nUNION ALL ")
-    s"""WITH g AS (
-       |  SELECT value,
-       |    $cSums
-       |  FROM events GROUP BY value),
-       |f AS (
-       |  SELECT value,
-       |    ${EventTypes.map(t => s"c_$t").mkString(", ")},
-       |    $fCums
-       |  FROM g),
-       |t AS (SELECT $nTots FROM g),
+    s"""WITH ${ecdfGridSqlCtes(withCounts = true)},
        |m AS (
        |  SELECT
        |    $momSums

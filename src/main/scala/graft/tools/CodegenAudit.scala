@@ -31,10 +31,17 @@ import org.apache.spark.sql.execution.debug
   *
   * {{{
   * {"query":NAME,"stages":N,"max_method_bytes":M,
-  *  "stages_over_8000":K,"over":["WholeStageCodegen id=..: bytes"]}
+  *  "stages_over_8000":K,"over":["WholeStageCodegen id=..: bytes"],
+  *  "stages_failed":F,"failed":["WholeStageCodegen id=.."]}
   * }}}
   *
   * `stages_over_8000 > 0` = this query HAS a JIT-refused slow mode.
+  * `stages_failed > 0` = a stage's generated class does not compile
+  * at all (Janino's 64 KB "Code grows beyond" ceiling, say): Spark
+  * then re-tries the compile and falls back to interpreted execution
+  * on EVERY run. `codegenStringSeq` swallows that failure and reports
+  * `ByteCodeStats.UNAVAILABLE` (−1 bytes), which would read as "under
+  * the limit" — so unavailable stats count as a failure here.
   * The fix is never a JVM flag (raising HugeMethodLimit trades the
   * cliff for a permanently-unoptimized method): shrink the generated
   * code — compact custom Expressions whose doGenCode calls a
@@ -48,16 +55,22 @@ import org.apache.spark.sql.execution.debug
   */
 object CodegenAudit {
 
-  /** Max generated-method bytecode size and the offending stage tags
-    * (> limit) for one DataFrame's executed plan. AQE note: the
+  /** One DataFrame's executed-plan codegen audit: the stage count,
+    * the largest generated method, the stage tags over `limit` (with
+    * their size) and the stage tags whose generated code fails to
+    * compile.
+    */
+  case class Result(stages: Int, maxMethodBytes: Int, over: Seq[String],
+      failed: Seq[String])
+
+  /** Audit one DataFrame's executed plan. AQE note: the
     * pre-execution `executedPlan` of an AdaptiveSparkPlanExec exposes
     * the initial physical plan's codegen subtrees — exchanges are not
     * yet reoptimized, but expression codegen (the thing that can blow
     * the method limit) is identical in the final plan, and runtime
     * reoptimization only ever SPLITS stages further.
     */
-  def audit(df: org.apache.spark.sql.DataFrame,
-      limit: Int = 8000): (Int, Int, Seq[String]) = {
+  def audit(df: org.apache.spark.sql.DataFrame, limit: Int = 8000): Result = {
     val stages = debug.codegenStringSeq(df.queryExecution.executedPlan)
     val sizes = stages.map { case (subtree, _, stats) =>
       val tag = subtree.linesIterator.find(_.nonEmpty).getOrElse("?").trim
@@ -65,7 +78,8 @@ object CodegenAudit {
       (tag, stats.maxMethodCodeSize)
     }
     val over = sizes.filter(_._2 > limit).map { case (t, s) => s"$t: $s" }
-    (sizes.size, if (sizes.isEmpty) 0 else sizes.map(_._2).max, over)
+    val failed = sizes.filter(_._2 < 0).map(_._1)
+    Result(sizes.size, if (sizes.isEmpty) 0 else sizes.map(_._2).max, over, failed)
   }
 
   def main(args: Array[String]): Unit = {
@@ -94,15 +108,18 @@ object CodegenAudit {
       case c => c.toString
     }
     var worst = 0
+    var failing = 0
     names.foreach { name =>
       val line =
         try {
           val df = graft.SparkEntry.queries(name)(spark, sfDir)
-          val (n, mx, over) = audit(df)
-          if (mx > worst) worst = mx
-          val overJson = over.map(o => "\"" + esc(o) + "\"").mkString("[", ",", "]")
-          s"""{"query":"${esc(name)}","stages":$n,"max_method_bytes":$mx,""" +
-            s""""stages_over_8000":${over.size},"over":$overJson}"""
+          val r = audit(df)
+          if (r.maxMethodBytes > worst) worst = r.maxMethodBytes
+          if (r.failed.nonEmpty) failing += 1
+          def arr(xs: Seq[String]) = xs.map(o => "\"" + esc(o) + "\"").mkString("[", ",", "]")
+          s"""{"query":"${esc(name)}","stages":${r.stages},"max_method_bytes":${r.maxMethodBytes},""" +
+            s""""stages_over_8000":${r.over.size},"over":${arr(r.over)},""" +
+            s""""stages_failed":${r.failed.size},"failed":${arr(r.failed)}}"""
         } catch {
           case scala.util.control.NonFatal(e) =>
             s"""{"query":"${esc(name)}","error":"${esc(e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage).take(120))}"}"""
@@ -110,7 +127,8 @@ object CodegenAudit {
       println(line)
       graft.core.OwnedCaches.release()
     }
-    println(s"""{"audit":"done","queries":${names.size},"worst_method_bytes":$worst}""")
+    println(s"""{"audit":"done","queries":${names.size},"worst_method_bytes":$worst,""" +
+      s""""queries_failing_compile":$failing}""")
     spark.stop()
   }
 }

@@ -14,7 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * mode as they evolve. The r15 tail itself was adjudicated to JIT
   * code-cache exhaustion (see build.sbt's ReservedCodeCacheSize note
   * and Bench's codecache_mb/jit_ms sidecar), which this spec's limit
-  * does not cover — the sidecar does.
+  * does not cover — the sidecar does. A stage whose generated class
+  * does not compile at all (Janino's 64 KB ceiling) falls back on
+  * every run; the audit counts it as failed, and the second test pins
+  * the event-type pair statistics, where that happened, at zero.
   */
 class CodegenGuardSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -28,19 +31,43 @@ class CodegenGuardSpec extends AnyFunSuite {
     "ann_pq_topk", "source_divergence_matrix", "token_entropy_by_source",
     "bigram_perplexity_by_source")
 
-  test("r15 tail queries stay under the JIT huge-method limit") {
-    // AQE off for the audit session only: pre-execution, the adaptive
-    // wrapper hides WholeStageCodegen subtrees from plan.collect, and
-    // expression codegen size is identical either way
+  // AQE off for the audit session only: pre-execution, the adaptive
+  // wrapper hides WholeStageCodegen subtrees from plan.collect, and
+  // expression codegen size is identical either way
+  private lazy val auditSession = {
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.adaptive.enabled", "false")
+    s2
+  }
+
+  private def audit(name: String) = {
+    val r = graft.tools.CodegenAudit.audit(SparkEntry.queries(name)(auditSession, sf))
+    assert(r.stages > 0, s"$name: no codegen stage found (audit not seeing the plan)")
+    r
+  }
+
+  test("r15 tail queries stay under the JIT huge-method limit") {
     val failures = Suspects.flatMap { name =>
-      val df = SparkEntry.queries(name)(s2, sf)
-      val (stages, maxBytes, over) = graft.tools.CodegenAudit.audit(df)
-      assert(stages > 0, s"$name: no codegen stage found (audit not seeing the plan)")
-      if (over.nonEmpty) Some(s"$name max=$maxBytes over=$over") else None
+      val r = audit(name)
+      if (r.over.nonEmpty || r.failed.nonEmpty)
+        Some(s"$name max=${r.maxMethodBytes} over=${r.over} failed=${r.failed}")
+      else None
     }
     assert(failures.isEmpty,
       s"generated methods over the 8000-byte JIT limit:\n${failures.mkString("\n")}")
+  }
+
+  // the event-type pair statistics once computed all 10 pairs in one
+  // wide row: lepage_test's 60 decimal sums and tost_equivalence's
+  // 10-way stack grew past the 64 KB method limit, and Spark fell back
+  // to interpreted execution on every run
+  test("event-type pair statistics compile every codegen stage") {
+    val pairQueries = Seq("lepage_test", "brunner_munzel", "cliff_delta", "tost_equivalence")
+    val failures = pairQueries.flatMap { name =>
+      val r = audit(name)
+      if (r.failed.nonEmpty) Some(s"$name failed=${r.failed}") else None
+    }
+    assert(failures.isEmpty,
+      s"whole-stage codegen stages that fail to compile:\n${failures.mkString("\n")}")
   }
 }
