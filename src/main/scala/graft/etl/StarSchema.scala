@@ -12,9 +12,12 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes (SURVEY.md §5): every dim is small relative to the fact
   * and explicitly broadcast into the fact build, so the fact join
-  * stage is map-only over the big table; the only wide shuffles are
-  * the newest-per-key window (keyed, pre-projected narrow) and the
-  * orders⋈lineitem join (co-partitioned on the order key).
+  * stage is map-only over the big table. The fact derives its date and
+  * session-context keys instead of joining those dims, so its one
+  * events shuffle is the per-customer purchase-context aggregate; the
+  * other wide shuffles are the newest-per-key aggregate (keyed,
+  * pre-projected narrow) and the orders⋈lineitem join (co-partitioned
+  * on the order key).
   */
 object StarSchema {
 
@@ -170,12 +173,6 @@ object StarSchema {
     * distinct + generate_surrogate_key over all of them).
     */
   def dimSessionContext(spark: SparkSession, dir: String): DataFrame =
-    dimSessionContextRaw(spark, dir)
-      .orderBy("customer_source_id", "event_type", "prop_k")
-
-  // dimSessionContext without the deterministic ORDER BY (the fact
-  // build joins this; a sort below a join is wasted work)
-  private def dimSessionContextRaw(spark: SparkSession, dir: String): DataFrame =
     stgEventsRaw(spark, dir)
       .filter(col("customer_source_id").isNotNull || col("event_type").isNotNull)
       .select(col("customer_source_id"), col("event_type"), col("prop_k"))
@@ -184,6 +181,7 @@ object StarSchema {
         surrogateKey(col("customer_source_id"), col("event_type"), col("prop_k"))
           .as("session_context_key"),
         col("customer_source_id"), col("event_type"), col("prop_k"))
+      .orderBy("customer_source_id", "event_type", "prop_k")
 
   // stgEvents without the deterministic ORDER BY (for internal reuse)
   private def stgEventsRaw(spark: SparkSession, dir: String): DataFrame =
@@ -227,36 +225,43 @@ object StarSchema {
       |FROM nation JOIN region ON n_regionkey = r_regionkey
       |ORDER BY location_source_id""".stripMargin
 
-  /** Fact build: line-grain sales fact, 5 dimensions broadcast
-    * left-joined — product/customer/location/date on single keys plus
-    * `dim_session_context` on its full composite key — unmatched keys
-    * coalesced to '-1' (reference:
+  /** Fact build: line-grain sales fact with 5 dimension keys
+    * (product, customer, location, date, session context), unmatched
+    * keys coalesced to '-1' (reference:
     * `models/facts/fact_sales_order.sql:34-39` coalesce fallbacks,
     * `:53-76` the dim left-join chain, `:83-91` the composite-key
-    * session-context join). The dims are broadcast so this is a
-    * map-only stage over lineitem⋈orders at any scale.
+    * session-context join).
     *
-    * The reference's staging rows carry the session attributes
-    * themselves; here the fact source has no event link, so the
-    * fact-side composite is the customer's canonical purchase context
-    * (event_type='purchase', min prop_k over their purchase events) —
-    * customers who never purchased resolve to '-1', exactly the
-    * reference's unmatched-context branch. The events aggregation this
-    * needs lives on the BROADCAST BUILD side (its output is
-    * customer-cardinality); the fact stream itself still never
-    * shuffles.
+    * Three key sources are broadcast left-joined: customer (its
+    * nation and surrogate key), part and nation. Two keys are derived
+    * instead of joined, because their dims only recompute what the
+    * fact stream already holds:
+    *  - `date_key` is `yyyyMMdd` of the order date: `dim_date` spans
+    *    the same orders' date range ±30 days, so every non-null order
+    *    date has its spine row;
+    *  - `session_context_key` is the composite surrogate key of the
+    *    customer's canonical purchase context (event_type='purchase',
+    *    min prop_k over their purchase events), which is by
+    *    construction one of `dim_session_context`'s distinct rows
+    *    whenever that min is non-null. The reference's staging rows
+    *    carry the session attributes themselves; here the fact source
+    *    has no event link, so customers who never purchased (or whose
+    *    purchases carry no prop_k) resolve to '-1', exactly the
+    *    reference's unmatched-context branch.
+    * The purchase context is the one events shuffle: a per-customer
+    * aggregate on the BROADCAST BUILD side (customer-cardinality
+    * output), so the fact stream itself never shuffles.
     *
-    * Broadcast hints are SIZE-SELECTED: nation and the date spine are
-    * bounded domains (25 rows / a few thousand days) and stay
-    * hard-hinted, but every customer-cardinality build side (the raw
-    * customer projection, the customer surrogate dim, the purchase
-    * context, the session-context dim) only gets the hint while the
-    * customer table is below [[BroadcastDimRowCap]] — a 10⁸-row
-    * customer dim under an unconditional hint is an executor OOM that
-    * bypasses autoBroadcastJoinThreshold. Above the cap the joins are
-    * left unhinted and AQE promotes at runtime only if they actually
-    * fit. ONE scalar (the customer row count) decides all four sides,
-    * the same layout-decision pattern as `SmallGraphPairCap` /
+    * Broadcast hints are SIZE-SELECTED: nation is a bounded domain
+    * (25 rows) and stays hard-hinted, but the customer-cardinality
+    * build sides (the customer projection and the purchase context)
+    * only get the hint while the customer table is below
+    * [[BroadcastDimRowCap]] — a 10⁸-row customer side under an
+    * unconditional hint is an executor OOM that bypasses
+    * autoBroadcastJoinThreshold. Above the cap the joins are left
+    * unhinted and AQE promotes at runtime only if they actually fit.
+    * ONE scalar (the customer row count) decides both sides, the same
+    * layout-decision pattern as `SmallGraphPairCap` /
     * `BroadcastNodeCap`. The part dim is catalog-cardinality (bounded
     * by the product assortment, not by traffic) and keeps its hint,
     * matching the reference's product-dim assumption.
@@ -278,7 +283,8 @@ object StarSchema {
     val li = t.lineitem.select(col("l_orderkey"), col("l_linenumber"),
       col("l_partkey"), col("l_quantity"), col("l_extendedprice"))
     val o = t.orders.select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"))
-    val cust = t.customer.select(col("c_custkey"), col("c_nationkey"))
+    val cust = t.customer.select(col("c_custkey"), col("c_nationkey"),
+      surrogateKey(col("c_custkey")).as("customer_key"))
 
     // Narrow key-only dim projections: each surrogate key is a pure
     // function of the source key column, so the fact build does NOT
@@ -288,22 +294,22 @@ object StarSchema {
     // drag a full events shuffle into every fact build).
     val dp = t.part.select(surrogateKey(col("p_partkey")).as("product_key"),
       col("p_partkey").cast("string").as("product_source_id"))
-    val dc = t.customer.select(surrogateKey(col("c_custkey")).as("customer_key"),
-      col("c_custkey").cast("string").as("customer_source_id"))
     val dl = t.nation.select(surrogateKey(col("n_nationkey")).as("location_key"),
       col("n_nationkey").cast("string").as("location_source_id"))
-    val dd = dimDate(spark, dir).select(col("date_key"), col("full_date"))
-    // the fact-side composite: one row per purchasing customer
+    // the fact-side composite: one row per purchasing customer, keyed
+    // as dim_session_context keys (customer, 'purchase', prop_k); a
+    // NULL min prop_k matches no dim row, so it keeps no key
     val pctx = stgEventsRaw(spark, dir)
       .filter(col("event_type") === "purchase" && col("customer_source_id").isNotNull)
       .groupBy(col("customer_source_id").as("ctx_cust"))
       .agg(min(col("prop_k")).as("ctx_k"))
-      .withColumn("ctx_type", lit("purchase"))
-    val dsc = dimSessionContextRaw(spark, dir)
-      .toDF("session_context_key", "sc_cust", "sc_type", "sc_k")
+      .select(col("ctx_cust"), when(col("ctx_k").isNotNull,
+        surrogateKey(col("ctx_cust"), lit("purchase"), col("ctx_k")))
+        .as("session_context_key"))
+    val orderDate = col("o_orderdate").cast("date")
 
-    // one scalar decides the layout for ALL customer-derived sides
-    // (pctx and dsc cardinalities are bounded by the customer count)
+    // one scalar decides the layout for BOTH customer-derived sides
+    // (the pctx cardinality is bounded by the customer count)
     // footer-metadata row count (Tables.rowCount): the layout decision
     // costs zero Spark jobs instead of a count() job per fact build
     val custSmall = !forceUnhinted &&
@@ -313,24 +319,20 @@ object StarSchema {
     li.join(o, col("l_orderkey") === col("o_orderkey"), "left")
       .join(custHint(cust), col("o_custkey") === col("c_custkey"), "left")
       .join(broadcast(dp), col("l_partkey").cast("string") === col("product_source_id"), "left")
-      .join(custHint(dc), col("o_custkey").cast("string") === col("customer_source_id"), "left")
       .join(broadcast(dl), col("c_nationkey").cast("string") === col("location_source_id"), "left")
-      .join(broadcast(dd), col("o_orderdate").cast("date").cast("string") === col("full_date"), "left")
       .join(custHint(pctx), col("o_custkey").cast("string") === col("ctx_cust"), "left")
-      .join(custHint(dsc), col("ctx_cust") === col("sc_cust") &&
-        col("ctx_type") === col("sc_type") && col("ctx_k") === col("sc_k"), "left")
       .select(
         surrogateKey(col("l_orderkey"), col("l_linenumber")).as("sales_order_key"),
         coalesce(col("product_key"), lit("-1")).as("product_key"),
         coalesce(col("customer_key"), lit("-1")).as("customer_key"),
         coalesce(col("location_key"), lit("-1")).as("location_key"),
         coalesce(col("session_context_key"), lit("-1")).as("session_context_key"),
-        coalesce(col("date_key"), lit(-1)).as("date_key"),
+        coalesce(date_format(orderDate, "yyyyMMdd").cast("int"), lit(-1)).as("date_key"),
         col("l_extendedprice").as("sales_amount"),
         col("l_quantity").as("quantity"),
         col("l_orderkey").cast("string").as("order_source_id"),
         col("l_linenumber").as("line_number"),
-        col("o_orderdate").cast("date").cast("string").as("order_date"))
+        orderDate.cast("string").as("order_date"))
       // (order, line) pairs are NOT unique in the data — extend the
       // sort with content columns so row order is total and
       // engine-independent

@@ -1,8 +1,10 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 /** Sources & sinks (SURVEY.md §2 J) — the reference's stage 5/6
   * (BSON dumps → object storage → partitioned warehouse load,
@@ -60,14 +62,40 @@ object GraftSources {
   /** Hive-style partitioned parquet sink. `maxRecordsPerFile` caps
     * file size so a skewed partition can't produce a single huge file
     * (the 100 TB failure mode of naive partitioned writes).
+    *
+    * A final global sort of `df` is dropped before the write: the
+    * sink keeps no row order (the write sorts each task's rows by the
+    * partition columns itself), so that order would only cost a
+    * sampling job and a range shuffle. The sort is kept where its
+    * order can matter — under a limit, under a nondeterministic
+    * projection — and where it is persisted, so that the cached plan
+    * is used.
     */
   def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String],
       maxRecordsPerFile: Long = 1L << 20): Unit =
-    df.write
+    withoutFinalSort(df).write
       .mode("append")
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy(partitionCols: _*)
       .parquet(path)
+
+  /** `df` without a global sort at its root or under deterministic
+    * projections only; `df` itself when it has none, or when the sort
+    * or a projection above it is persisted.
+    */
+  private def withoutFinalSort(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    def persisted(p: LogicalPlan): Boolean =
+      GraftSqlShim.ofRows(spark, p).storageLevel != StorageLevel.NONE
+    def strip(p: LogicalPlan): Option[LogicalPlan] = p match {
+      case _ if persisted(p) => None
+      case s: Sort if s.global => Some(s.child)
+      case pr: Project if pr.projectList.forall(_.deterministic) =>
+        strip(pr.child).map(c => pr.copy(child = c))
+      case _ => None
+    }
+    strip(GraftSqlShim.logicalPlan(df)).fold(df)(GraftSqlShim.ofRows(spark, _))
+  }
 
   /** List the partition directory names (e.g. `event_date=2024-01-01`)
     * currently present under a partitioned table root.

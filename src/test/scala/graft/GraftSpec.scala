@@ -25,6 +25,41 @@ object TestSpark {
   val sf: String = "/root/testdata/sf0.001"
 }
 
+/** The query execution of the one parquet file write under `dir`
+  * that a block runs, captured off the session's execution listeners.
+  */
+object WritePlan {
+  import org.apache.spark.sql.execution.QueryExecution
+  import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+  import org.apache.spark.sql.util.QueryExecutionListener
+
+  def capture(spark: SparkSession, dir: String)(body: => Unit): QueryExecution = {
+    val seen = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.logical match {
+          case w: InsertIntoHadoopFsRelationCommand
+            if w.outputPath.toString.contains(dir) => seen.put(qe)
+          case _ =>
+        }
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // listeners are called off the listener bus, after the write returns
+      val qe = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      assert(qe != null, s"no write under $dir reported")
+      qe
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Every node of the executed plan, adaptive query stages included. */
+  def nodes(qe: QueryExecution): Seq[org.apache.spark.sql.execution.SparkPlan] =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(qe.executedPlan) { case p => p }
+}
+
 class FunctionsSpec extends AnyFunSuite {
   import graft.functions.GraftFunctions._
   import org.apache.spark.sql.functions._
@@ -233,6 +268,24 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct"))
   }
 
+  test("fact_sales partitioned write runs no range shuffle and one hash exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    val dir = java.nio.file.Files.createTempDirectory("graft_factwrite").toString
+    val qe = WritePlan.capture(spark, dir) {
+      graft.sources.GraftSources.writePartitioned(
+        StarSchema.factSales(spark, TestSpark.sf), s"$dir/fact_sales", Seq("order_date"))
+    }
+    val nodes = WritePlan.nodes(qe)
+    val shuffles = nodes.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+    // the fact's final sort is dropped: the sink keeps no row order
+    assert(!shuffles.exists(_.isInstanceOf[RangePartitioning]), qe.executedPlan.toString)
+    // the purchase-context aggregate is the only shuffle
+    assert(shuffles.count(_.isInstanceOf[HashPartitioning]) == 1, qe.executedPlan.toString)
+    // orders, customer, part, nation and the purchase context
+    assert(nodes.count(_.isInstanceOf[BroadcastExchangeExec]) == 5, qe.executedPlan.toString)
+  }
+
   test("q1 scan is pruned and aggregation is partial (map-side combine)") {
     val plan = physicalPlan(Analytics.q1PricingSummary(spark, TestSpark.sf))
     assert(!plan.contains("l_shipdate"), "unreferenced column not pruned")
@@ -428,6 +481,39 @@ class SourcesSpec extends AnyFunSuite {
       .listFiles().count(_.getName.endsWith(".parquet"))
     assert(files >= 4, s"expected >=4 capped files, got $files")
     assert(spark.read.parquet(table).count() == 100)
+  }
+
+  test("partitioned sink keeps a sort under a limit, a persisted one, and one under rand()") {
+    import org.apache.spark.sql.catalyst.plans.logical.Sort
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val base = spark.range(200).repartition(3)
+      .select(col("id"), concat(lit("d"), col("id") % 4).as("event_date"))
+    def sorted = base.orderBy(col("id").desc)
+    def hasGlobalSort(qe: org.apache.spark.sql.execution.QueryExecution) =
+      qe.optimizedPlan.exists { case s: Sort => s.global; case _ => false }
+    def write(name: String, df: org.apache.spark.sql.DataFrame) = {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_keep_$name").toString
+      val qe = WritePlan.capture(spark, dir) {
+        GraftSources.writePartitioned(df, s"$dir/t", Seq("event_date"))
+      }
+      val back = spark.read.parquet(s"$dir/t").select(df.columns.map(col): _*)
+        .collect().map(_.toSeq).sortBy(_.toString).toSeq
+      assert(back == df.collect().map(_.toSeq).sortBy(_.toString).toSeq, name)
+      qe
+    }
+    // the limit picks its rows by the sort
+    assert(hasGlobalSort(write("limit", sorted.limit(17))))
+    // a persisted frame is written from its cache, also under a projection
+    val cached = sorted.persist()
+    try {
+      cached.count()
+      for ((name, df) <- Seq("persisted" -> cached,
+          "persisted_projected" -> cached.select(col("event_date"), col("id"))))
+        assert(WritePlan.nodes(write(name, df)).exists(_.isInstanceOf[InMemoryTableScanExec]), name)
+    } finally cached.unpersist()
+    // a seeded rand() above the sort draws by row position, so the
+    // written draws equal the collected ones only if the sort stays
+    assert(hasGlobalSort(write("rand", sorted.withColumn("r", rand(7)))))
   }
 
   test("partitioned sink + incremental loader reads only new partitions") {

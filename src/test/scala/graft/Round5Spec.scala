@@ -102,11 +102,11 @@ class FactBroadcastSpec extends AnyFunSuite {
     }.size
 
   test("customer-derived build sides are hinted only below the row cap") {
-    // small corpus (default branch): all 7 dim sides carry the hint
-    assert(broadcastHints(StarSchema.factSales(spark, sf)) >= 7)
-    // at-scale branch: only the bounded domains (part, nation, date
-    // spine) stay hinted; the four customer-derived sides are AQE's call
-    assert(broadcastHints(StarSchema.factSales(spark, sf, forceUnhinted = true)) == 3)
+    // small corpus (default branch): all 4 dim sides carry the hint
+    assert(broadcastHints(StarSchema.factSales(spark, sf)) == 4)
+    // at-scale branch: only the bounded domains (part, nation) stay
+    // hinted; the two customer-derived sides are AQE's call
+    assert(broadcastHints(StarSchema.factSales(spark, sf, forceUnhinted = true)) == 2)
   }
 
   test("both broadcast layouts build the identical fact table") {
@@ -114,6 +114,116 @@ class FactBroadcastSpec extends AnyFunSuite {
       StarSchema.factSales(spark, sf, forceUnhinted = forced)
         .collect().map(_.toSeq).toSeq
     assert(rows(forced = true) == rows(forced = false))
+  }
+}
+
+/** The fact build derives its date and session-context keys and takes
+  * the customer key from its one customer join. The dim-join chain it
+  * replaced (date spine, distinct session-context dim, second customer
+  * scan) is kept here as the reference, and both must build the same
+  * rows — also where the derived keys fall back to '-1'.
+  */
+class FactKeyDerivationSpec extends AnyFunSuite {
+  import graft.core.Tables
+  import graft.etl.StarSchema
+  import graft.functions.GraftFunctions.surrogateKey
+  import org.apache.spark.sql.DataFrame
+  lazy val spark = TestSpark.spark
+  val sf = TestSpark.sf
+
+  /** The fact as a left-join chain over the dims themselves. */
+  private def reference(dir: String): DataFrame = {
+    val t = Tables(spark, dir)
+    val li = t.lineitem.select(col("l_orderkey"), col("l_linenumber"),
+      col("l_partkey"), col("l_quantity"), col("l_extendedprice"))
+    val o = t.orders.select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"))
+    val cust = t.customer.select(col("c_custkey"), col("c_nationkey"))
+    val dp = t.part.select(surrogateKey(col("p_partkey")).as("product_key"),
+      col("p_partkey").cast("string").as("product_source_id"))
+    val dc = t.customer.select(surrogateKey(col("c_custkey")).as("customer_key"),
+      col("c_custkey").cast("string").as("customer_source_id"))
+    val dl = t.nation.select(surrogateKey(col("n_nationkey")).as("location_key"),
+      col("n_nationkey").cast("string").as("location_source_id"))
+    val dd = StarSchema.dimDate(spark, dir).select(col("date_key"), col("full_date"))
+    val pctx = StarSchema.stgEvents(spark, dir)
+      .filter(col("event_type") === "purchase" && col("customer_source_id").isNotNull)
+      .groupBy(col("customer_source_id").as("ctx_cust"))
+      .agg(min(col("prop_k")).as("ctx_k"))
+      .withColumn("ctx_type", lit("purchase"))
+    val dsc = StarSchema.dimSessionContext(spark, dir)
+      .toDF("session_context_key", "sc_cust", "sc_type", "sc_k")
+    li.join(o, col("l_orderkey") === col("o_orderkey"), "left")
+      .join(cust, col("o_custkey") === col("c_custkey"), "left")
+      .join(dp, col("l_partkey").cast("string") === col("product_source_id"), "left")
+      .join(dc, col("o_custkey").cast("string") === col("customer_source_id"), "left")
+      .join(dl, col("c_nationkey").cast("string") === col("location_source_id"), "left")
+      .join(dd, col("o_orderdate").cast("date").cast("string") === col("full_date"), "left")
+      .join(pctx, col("o_custkey").cast("string") === col("ctx_cust"), "left")
+      .join(dsc, col("ctx_cust") === col("sc_cust") &&
+        col("ctx_type") === col("sc_type") && col("ctx_k") === col("sc_k"), "left")
+      .select(
+        surrogateKey(col("l_orderkey"), col("l_linenumber")).as("sales_order_key"),
+        coalesce(col("product_key"), lit("-1")).as("product_key"),
+        coalesce(col("customer_key"), lit("-1")).as("customer_key"),
+        coalesce(col("location_key"), lit("-1")).as("location_key"),
+        coalesce(col("session_context_key"), lit("-1")).as("session_context_key"),
+        coalesce(col("date_key"), lit(-1)).as("date_key"),
+        col("l_extendedprice").as("sales_amount"),
+        col("l_quantity").as("quantity"),
+        col("l_orderkey").cast("string").as("order_source_id"),
+        col("l_linenumber").as("line_number"),
+        col("o_orderdate").cast("date").cast("string").as("order_date"))
+      .orderBy(col("order_source_id"), col("line_number"), col("product_key"),
+        col("sales_amount"), col("quantity"))
+  }
+
+  private def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
+
+  private def assertMatchesReference(dir: String): Seq[Seq[Any]] = {
+    val expected = rows(reference(dir))
+    for (forced <- Seq(false, true))
+      assert(rows(StarSchema.factSales(spark, dir, forceUnhinted = forced)) == expected,
+        s"forceUnhinted=$forced")
+    expected
+  }
+
+  test("derived keys equal the dim-join chain on sf0.001") {
+    assertMatchesReference(sf)
+  }
+
+  test("derived keys equal the dim-join chain where they fall back to -1") {
+    val t = Tables(spark, sf)
+    // a purchasing customer with orders whose purchase events then all
+    // lose their props: the purchase context has a NULL prop_k
+    val cust = StarSchema.stgEvents(spark, sf)
+      .filter(col("event_type") === "purchase" && col("prop_k").isNotNull)
+      .join(t.orders, col("customer_source_id") === col("o_custkey").cast("string"))
+      .agg(min(col("o_custkey"))).collect()(0).getLong(0)
+    val rawEvents = spark.read.parquet(s"$sf/events.parquet")
+    val events = rawEvents.withColumn("props",
+      when(col("user_id") === cust && col("event_type") === "purchase",
+        lit(null).cast("string")).otherwise(col("props")))
+    // one line whose order is missing: no order date, no customer
+    val rawLines = spark.read.parquet(s"$sf/lineitem.parquet")
+    val orphanKey = t.orders.agg(max(col("o_orderkey"))).collect()(0).getLong(0) + 1
+    val lines = rawLines.union(rawLines.limit(1).withColumn("l_orderkey", lit(orphanKey)))
+    val dir = java.nio.file.Files.createTempDirectory("graft_factkeys").toString
+    for (f <- new java.io.File(sf).listFiles()
+         if f.getName != "events.parquet" && f.getName != "lineitem.parquet")
+      java.nio.file.Files.createSymbolicLink(
+        java.nio.file.Paths.get(s"$dir/${f.getName}"), f.toPath)
+    events.write.parquet(s"$dir/events.parquet")
+    lines.write.parquet(s"$dir/lineitem.parquet")
+
+    val expected = assertMatchesReference(dir)
+    val custKey = StarSchema.dimCustomer(spark, dir)
+      .filter(col("customer_source_id") === cust.toString)
+      .select("customer_key").collect()(0).getString(0)
+    // both fallbacks are live in the crafted data
+    val orphan = expected.filter(_(8) == orphanKey.toString)
+    assert(orphan.size == 1 && orphan.head(5) == -1)
+    val ctx = expected.filter(_(2) == custKey)
+    assert(ctx.nonEmpty && ctx.forall(_(4) == "-1"))
   }
 }
 
