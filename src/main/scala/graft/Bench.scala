@@ -1,31 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf, must be set before the first session (round 17,
-      // VERDICT r16 #1): the default 100-entry codegen cache evicts
-      // every generated class several times across a 429-query sweep,
-      // so the timed pass re-Janinos (and re-JITs) code the warmup
-      // sweep already compiled. A full-registry session generates
-      // ~2-3k distinct codegen units (CODEGEN_AUDIT_r16: ~2k WSCG
-      // stages + projections/predicates/orderings); 4096 retains them
-      // all, making warmup compilation actually pay for the timed pass.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    // AQE partition-sizing policy (optimization round 19): coalesce
-    // post-shuffle partitions by bytes INCLUDING inside cached-plan
-    // subtrees — see GraftSession.tunedShuffleConfs for the rationale
-    // and the measured evidence. Runtime SQL confs; same methodology,
-    // same queries, same timing as before.
-    graft.core.GraftSession.tunedShuffleConfs
-      .foreach { case (k, v) => spark.conf.set(k, v) }
+    // full codegen retention makes the warmup sweep's compilation pay
+    // for the timed pass (see GraftSession.retainAllCodegen)
+    val spark = GraftSession.harness("graft-bench", Seq(GraftSession.retainAllCodegen))
     spark.sparkContext.setLogLevel("WARN")
     // ---- self-diagnosing sidecar (VERDICT r12 #1): the r12 driver
     // bench collapsed 2.17× on unchanged code in one alphabetical
@@ -62,7 +42,7 @@ object Bench {
     def load1: Double =
       try new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/loadavg")), "UTF-8").split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
+      catch { case scala.util.control.NonFatal(_) => -1.0 }
     def jvmGcMs: Long = {
       var s = 0L
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -243,7 +223,8 @@ object Bench {
         if (isolate) { spark.catalog.clearCache(); graft.core.SharedFrames.reset() }
         graft.core.SharedFrames.begin(name)
         val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+        val ok = try { fn(spark, sfDir).count(); true }
+          catch { case scala.util.control.NonFatal(_) => false }
         val dt = (System.nanoTime() - t0) / 1e9
         // operator-owned caches release between runs (untimed): each
         // run then pays its own full cost — per-query numbers stop

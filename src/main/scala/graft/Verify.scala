@@ -10,21 +10,8 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same full-session codegen-class retention as Bench (round 17):
-      // the 100-entry default re-Janinos evicted classes several times
-      // across a 429-query dump; static conf, set before first session
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    // AQE partition-sizing policy — same confs as Bench (round 19);
-    // see GraftSession.tunedShuffleConfs
-    graft.core.GraftSession.tunedShuffleConfs
-      .foreach { case (k, v) => spark.conf.set(k, v) }
+    val spark = graft.core.GraftSession.harness("graft-verify",
+      Seq(graft.core.GraftSession.retainAllCodegen))
     spark.sparkContext.setLogLevel("WARN")
     run(spark, sfDir, outDir, only)
     spark.stop()

@@ -1,63 +1,21 @@
 package graft.core
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** SparkSessionExtensions hook: registers graft's Catalyst functions
-  * at session build time — usable via
+/** SparkSessionExtensions hook: registers every `graft_*` function of
+  * `graft.functions.sqlFunctions` at session build time — usable via
   * `.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.core.GraftExtensions`, after which
-  * `graft_dot` / `graft_shingles` work from plain SQL.
+  * `spark.sql.extensions=graft.core.GraftExtensions`, after which all
+  * of them work from plain SQL.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    e.injectFunction((FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[graft.functions.DotProduct].getName, "graft_dot"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.DotProduct(exprs.head, exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[graft.functions.TokenShingles].getName, "graft_shingles"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.TokenShingles(exprs.head,
-          exprs(1).eval().asInstanceOf[Int])))
-    e.injectFunction((FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[graft.functions.SimHash64].getName, "graft_simhash"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.SimHash64(exprs.head)))
-    e.injectFunction((FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[graft.functions.MinHashSig].getName, "graft_minhash"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.MinHashSig(exprs.head)))
-    e.injectFunction((FunctionIdentifier("graft_sorted_hashes"),
-      new ExpressionInfo(classOf[graft.functions.SortedHashes].getName, "graft_sorted_hashes"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.SortedHashes(exprs.head)))
-    e.injectFunction((FunctionIdentifier("graft_sorted_intersect"),
-      new ExpressionInfo(classOf[graft.functions.SortedIntersectCount].getName,
-        "graft_sorted_intersect"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.SortedIntersectCount(exprs.head, exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_rademacher"),
-      new ExpressionInfo(classOf[graft.functions.RademacherSketch].getName,
-        "graft_rademacher"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.RademacherSketch(exprs.head)))
-    e.injectFunction((FunctionIdentifier("graft_rolling_hashes"),
-      new ExpressionInfo(classOf[graft.functions.RollingHashes].getName,
-        "graft_rolling_hashes"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.RollingHashes(exprs.head)))
-    e.injectFunction((FunctionIdentifier("graft_unit"),
-      new ExpressionInfo(classOf[graft.functions.UnitVector].getName, "graft_unit"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.UnitVector(exprs.head)))
-    e.injectFunction((FunctionIdentifier("graft_topk"),
-      new ExpressionInfo(classOf[graft.functions.BoundedTopK].getName, "graft_topk"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.BoundedTopK(
-          exprs.head.eval().asInstanceOf[Int], exprs(1))))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    graft.functions.sqlFunctions.foreach { f =>
+      e.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.cls.getName, f.name), f.build))
+    }
 }
 
 /** Session factory with the engine's tuned defaults: AQE on (runtime
@@ -85,25 +43,41 @@ object GraftSession {
     *    size), not up to core count — the Spark tuning guide's own
     *    recommendation; byte-sized partitions are the scale-adaptive
     *    policy (a 100 TB shuffle still gets thousands of partitions).
-    *  - advisory partition size / min partition size: scale-dependent,
-    *    so parameterised. Local default 4m/256k keeps CPU-dense
-    *    aggregates parallel at the bench's kilobyte-to-tens-of-MB
-    *    shuffle sizes while collapsing the kilobyte shuffles to 1-2
-    *    tasks; production clusters raise to the 64m-256m range
-    *    (SPARK_GRAFT_ADVISORY_PART / SPARK_GRAFT_MIN_PART).
+    *  - advisory partition size / min partition size, 4m/256k: keeps
+    *    CPU-dense aggregates parallel at the bench's kilobyte-to-tens-
+    *    of-MB shuffle sizes while collapsing the kilobyte shuffles to
+    *    1-2 tasks. Production clusters raise both to the 64m-256m range
+    *    by setting the two Spark confs directly.
     */
   def tunedShuffleConfs: Seq[(String, String)] = Seq(
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
     "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
-      sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PART", "4m"),
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
-      sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "256k"))
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4m",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "256k")
 
+  /** Codegen-class retention for full-registry sweeps (Bench, Verify,
+    * PerfProbe). The default 100-entry codegen cache evicts every
+    * generated class several times across a 475-query sweep, so a timed
+    * pass re-Janinos (and re-JITs) code the warmup already compiled. A
+    * full-registry session generates ~2-3k distinct codegen units
+    * (~2k whole-stage stages plus projections, predicates and
+    * orderings); 4096 retains them all. A static conf: pass it through
+    * `create`'s `confs`, it has no effect once the session exists.
+    */
+  val retainAllCodegen: (String, String) = "spark.sql.codegen.cache.maxEntries" -> "4096"
+
+  /** Build (or get) the session: graft's extensions, AQE with coalescing
+    * and skew-join splitting, [[tunedShuffleConfs]], UTC, no UI, and
+    * then [[register]]. `confs` are applied after these defaults and
+    * before `getOrCreate`, so they override a default (CodegenAudit
+    * turns AQE off this way) and static confs such as
+    * [[retainAllCodegen]] take effect.
+    */
   def create(appName: String = "graft",
       master: String = "local[*]",
-      shufflePartitions: Int = 32): SparkSession = {
-    var b = SparkSession.builder()
+      shufflePartitions: Int = 32,
+      confs: Seq[(String, String)] = Nil): SparkSession = {
+    val b = SparkSession.builder()
       .appName(appName)
       .master(master)
       .withExtensions(new GraftExtensions)
@@ -113,29 +87,29 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    tunedShuffleConfs.foreach { case (k, v) => b = b.config(k, v) }
+    (tunedShuffleConfs ++ confs).foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     register(spark)
     spark
   }
 
-  /** Register graft's custom Catalyst expressions and required confs
+  /** The [[create]] session of the harness mains (Bench, Verify and the
+    * tools): `local[n]` with one shuffle partition per core, where n is
+    * `SPARK_GRAFT_CPUS` (default 32).
+    */
+  def harness(appName: String, confs: Seq[(String, String)] = Nil): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    create(appName, s"local[$cpus]", cpus, confs)
+  }
+
+  /** Register every `graft_*` function and the required confs
     * in an existing session (idempotent). The nanos conf belongs here
     * so that ANY events read in this session works — not only reads
     * routed through `Tables` (the footgun a bare
     * `spark.read.parquet(events)` otherwise hits).
     */
   def register(spark: SparkSession): Unit = {
-    graft.functions.DotProduct.register(spark)
-    graft.functions.TokenShingles.register(spark)
-    graft.functions.BoundedTopK.register(spark)
-    graft.functions.SimHash64.register(spark)
-    graft.functions.MinHashSig.register(spark)
-    graft.functions.SortedHashes.register(spark)
-    graft.functions.SortedIntersectCount.register(spark)
-    graft.functions.RademacherSketch.register(spark)
-    graft.functions.RollingHashes.register(spark)
-    graft.functions.UnitVector.register(spark)
+    graft.functions.sqlFunctions.foreach(f => graft.functions.registerOnce(spark, f.name))
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
   }
 }

@@ -195,8 +195,6 @@ object SharedFrames {
     (rebuilds, und, live)
   }
 
-  private[graft] def liveCount: Int = entries.size()
-
   /** Test hook: drop the planned-query state (back to library
     * semantics) without touching live frames.
     */

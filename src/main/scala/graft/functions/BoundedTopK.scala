@@ -97,6 +97,5 @@ case class BoundedTopK(k: Int, child: Expression,
 object BoundedTopK {
   /** Register `graft_topk(k, struct(ord, id))` (idempotent). */
   def register(spark: SparkSession): Unit =
-    registerOnce(spark, "graft_topk")(exprs =>
-      BoundedTopK(exprs.head.eval().asInstanceOf[Int], exprs(1)))
+    registerOnce(spark, "graft_topk")
 }

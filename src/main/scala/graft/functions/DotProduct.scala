@@ -56,5 +56,5 @@ object DotProduct {
     * Callers then use `expr("graft_dot(a, b)")`.
     */
   def register(spark: SparkSession): Unit =
-    registerOnce(spark, "graft_dot")(exprs => DotProduct(exprs.head, exprs(1)))
+    registerOnce(spark, "graft_dot")
 }

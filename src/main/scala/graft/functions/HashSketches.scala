@@ -100,7 +100,7 @@ case class SimHash64(child: Expression)
 object SimHash64 {
   /** Register `graft_simhash(tokens)` (idempotent). */
   def register(spark: SparkSession): Unit =
-    registerOnce(spark, "graft_simhash")(exprs => SimHash64(exprs.head))
+    registerOnce(spark, "graft_simhash")
 }
 
 /** Sorted xxhash64 fingerprints of a string array — the cheap set
@@ -144,7 +144,7 @@ case class SortedHashes(child: Expression)
 object SortedHashes {
   /** Register `graft_sorted_hashes(strings)` (idempotent). */
   def register(spark: SparkSession): Unit =
-    registerOnce(spark, "graft_sorted_hashes")(exprs => SortedHashes(exprs.head))
+    registerOnce(spark, "graft_sorted_hashes")
 }
 
 /** Intersection size of two SORTED long arrays (one merge walk, no
@@ -176,8 +176,7 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 object SortedIntersectCount {
   /** Register `graft_sorted_intersect(a, b)` (idempotent). */
   def register(spark: SparkSession): Unit =
-    registerOnce(spark, "graft_sorted_intersect")(exprs =>
-      SortedIntersectCount(exprs.head, exprs(1)))
+    registerOnce(spark, "graft_sorted_intersect")
 }
 
 /** Sign-random-projection (SimHash-for-vectors) LSH sketch with
@@ -264,7 +263,7 @@ object RademacherSketch {
 
   /** Register `graft_rademacher(embedding)` (idempotent). */
   def register(spark: SparkSession): Unit =
-    registerOnce(spark, "graft_rademacher")(exprs => RademacherSketch(exprs.head))
+    registerOnce(spark, "graft_rademacher")
 }
 
 /** 126-bit signed-random-projection signature of an embedding — the
@@ -354,7 +353,7 @@ object Srp126 {
 
   /** Register `graft_srp126(embedding)` (idempotent). */
   def register(spark: SparkSession): Unit =
-    registerOnce(spark, "graft_srp126")(exprs => Srp126(exprs.head))
+    registerOnce(spark, "graft_srp126")
 }
 
 /** True rolling-hash (Rabin–Karp) document fingerprints: polynomial
@@ -421,7 +420,7 @@ object RollingHashes {
 
   /** Register `graft_rolling_hashes(text)` (idempotent). */
   def register(spark: SparkSession): Unit =
-    registerOnce(spark, "graft_rolling_hashes")(exprs => RollingHashes(exprs.head))
+    registerOnce(spark, "graft_rolling_hashes")
 }
 
 /** Robust-winnowing document fingerprints (the MOSS selection rule):
@@ -499,7 +498,7 @@ object WinnowedHashes {
 
   /** Register `graft_winnowed_hashes(text)` (idempotent). */
   def register(spark: SparkSession): Unit =
-    registerOnce(spark, "graft_winnowed_hashes")(exprs => WinnowedHashes(exprs.head))
+    registerOnce(spark, "graft_winnowed_hashes")
 }
 
 /** 64-permutation MinHash signature of a shingle array.
@@ -561,5 +560,5 @@ object MinHashSig {
 
   /** Register `graft_minhash(shingles)` (idempotent). */
   def register(spark: SparkSession): Unit =
-    registerOnce(spark, "graft_minhash")(exprs => MinHashSig(exprs.head))
+    registerOnce(spark, "graft_minhash")
 }

@@ -90,13 +90,5 @@ case class QuantUnitVector(child: Expression) extends UnaryExpression {
 object QuantUnitVector {
   /** Register `graft_qunit` in the session's function registry (idempotent). */
   def register(spark: SparkSession): Unit =
-    registerOnce(spark, "graft_qunit") { exprs =>
-      // arity-checked like the other graft_* registrations: silently
-      // dropping extra args (or NoSuchElementException on zero) hides
-      // caller bugs behind wrong-but-plausible results (ADVICE r13)
-      if (exprs.length != 1)
-        throw new IllegalArgumentException(
-          s"graft_qunit expects exactly 1 argument (array<double>), got ${exprs.length}")
-      QuantUnitVector(exprs.head)
-    }
+    registerOnce(spark, "graft_qunit")
 }

@@ -128,6 +128,5 @@ case class SpaceSaving(k: Int, child: Expression,
 object SpaceSaving {
   /** Register `graft_spacesaving(k, key)` (idempotent). */
   def register(spark: SparkSession): Unit =
-    registerOnce(spark, "graft_spacesaving")(exprs =>
-      SpaceSaving(exprs.head.eval().asInstanceOf[Int], exprs(1)))
+    registerOnce(spark, "graft_spacesaving")
 }

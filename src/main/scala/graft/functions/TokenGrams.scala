@@ -48,6 +48,5 @@ case class TokenGrams(child: Expression, n: Int)
 object TokenGrams {
   /** Register `graft_grams(text, n)` (idempotent). */
   def register(spark: SparkSession): Unit =
-    registerOnce(spark, "graft_grams")(exprs =>
-      TokenGrams(exprs.head, exprs(1).eval().asInstanceOf[Int]))
+    registerOnce(spark, "graft_grams")
 }

@@ -65,8 +65,7 @@ case class TokenShingles(child: Expression, n: Int)
 object TokenShingles {
   /** Register `graft_shingles(text, n)` (idempotent). */
   def register(spark: SparkSession): Unit =
-    registerOnce(spark, "graft_shingles")(exprs =>
-      TokenShingles(exprs.head, exprs(1).eval().asInstanceOf[Int]))
+    registerOnce(spark, "graft_shingles")
 }
 
 /** The ONE text-normalization contract under the shingle/gram family

@@ -87,5 +87,5 @@ case class UnitVector(child: Expression) extends UnaryExpression {
 object UnitVector {
   /** Register `graft_unit` in the session's function registry (idempotent). */
   def register(spark: SparkSession): Unit =
-    registerOnce(spark, "graft_unit")(exprs => UnitVector(exprs.head))
+    registerOnce(spark, "graft_unit")
 }

@@ -40,41 +40,27 @@ object Graph {
     */
   private[graft] val BroadcastNodeCap = 5000000L
 
-  /** Below this many edges the whole graph fits one task and the
-    * iterative loop's per-round jobs (a broadcast collect + a count
-    * barrier × 5 rounds) are pure local stage latency: a single
-    * mapPartitions pass runs all iterations in memory with arithmetic
-    * bit-identical to the loop (long `div`, `floor(0.85 · x)` on
-    * doubles — same IEEE ops, same operand order), asserted by
-    * branch-equality tests. Same layout-selection pattern as
-    * `Dedup.SmallGraphPairCap`.
+  /** Single-task replay admission. Below its cap the whole graph fits
+    * one task and the iterative loop's per-round jobs (a broadcast
+    * collect + a count barrier × 5 rounds) are pure local stage
+    * latency: a single mapPartitions pass runs all iterations in memory
+    * with arithmetic bit-identical to the loop (long `div`,
+    * `floor(0.85 · x)` on doubles — same IEEE ops, same operand order),
+    * asserted by branch-equality tests. Same layout-selection pattern
+    * as `Dedup.SmallGraphPairCap`.
     *
-    * The cap is an admission on estimated SINGLE-TASK WORK, and is
-    * only valid while every admitted replay stays within a few
-    * seconds — VERDICT r12 caught `louvainReplay`'s boxed tally at
-    * ~13 µs/edge·round, which let the cap admit a 112 s single task
-    * at 1.2M edges. The replay bodies are therefore factored out as
-    * pure functions and MEASURED by `graft.tools.ReplayCalibrate`
-    * (re-run it after touching any replay): at 2M edges the worst
-    * admitted replay is pagerank at ~2 s (0.2 µs/row·iter × 5), with
-    * louvain 0.69 s, kcore 0.35 s, relax 0.17 s. A replay family
-    * whose measured cost exceeds ~2 µs/edge·round must take a lower
-    * family-specific cap instead of this one.
-    */
-  @deprecated("superseded by the measured replayCap admission", "round 13")
-  private[graft] val SingleTaskEdgeCap = 2000000L
-
-  /** Work-based single-task admission (round 13): cap = budget /
-    * (measured per-row·round replay cost × rounds), clamped to
+    * The cap is work-based (round 13): cap = budget / (measured
+    * per-row·round replay cost × rounds), clamped to
     * [[SingleTaskRowMax]] rows so one task's edge array stays a few
-    * hundred MB. The per-family constants come from ReplayCalibrate
-    * on the SHIPPED replay bodies (margins above the measured
-    * 0.03–0.05 µs for the array replays, ~0.2–0.4 µs for pagerank's
-    * LongMap replay). The flat 2M [[SingleTaskEdgeCap]] this replaces
-    * both ADMITTED a too-expensive replay (the r12 112 s Louvain,
-    * before the replay rewrite) and REJECTED cheap ones — the 10×
-    * probe's 2.4M-row CC relax fell to the distributed loop and paid
-    * 30 s of stage latency for 0.4 s of single-task work.
+    * hundred MB. The replay bodies are factored out as pure functions
+    * and the per-family constants come from `graft.tools.ReplayCalibrate`
+    * on the SHIPPED bodies (re-run it after touching any replay;
+    * margins above the measured 0.03–0.05 µs for the array replays,
+    * ~0.2–0.4 µs for pagerank's LongMap replay). The flat 2M-edge cap
+    * this replaced both ADMITTED a too-expensive replay (the r12 112 s
+    * Louvain, before the replay rewrite) and REJECTED cheap ones — the
+    * 10× probe's 2.4M-row CC relax fell to the distributed loop and
+    * paid 30 s of stage latency for 0.4 s of single-task work.
     */
   private[graft] val SingleTaskBudgetUs = 3e6
   private[graft] val SingleTaskRowMax = 8000000L
@@ -108,7 +94,7 @@ object Graph {
   /** `forceCopartition` pins the at-scale branch for tests;
     * `forceLoop` pins the broadcast-iteration mid-scale branch (skips
     * the single-task shortcut). The default selects by edge count,
-    * then node count (see [[SingleTaskEdgeCap]], [[BroadcastNodeCap]]).
+    * then node count (see [[replayCap]], [[BroadcastNodeCap]]).
     */
   /** The customer–supplier transaction graph: distinct (customer,
     * supplier) purchase pairs encoded on disjoint node ids (2c even /

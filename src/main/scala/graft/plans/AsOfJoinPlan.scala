@@ -278,7 +278,7 @@ object PushFilterThroughAsOfJoin
 object AsOf {
   /** As-of join two frames on the positional contract (uid, ts,
     * payload/key). Idempotently installs the planner strategy in the
-    * session (also injectable via `GraftExtensions`).
+    * session.
     */
   def join(spark: SparkSession, probe: DataFrame, build: DataFrame): DataFrame = {
     // the exec reads children positionally as longs — fail at PLAN

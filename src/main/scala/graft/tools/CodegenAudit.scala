@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.debug
 
 /** Per-query generated-code size audit — the execution-mode
@@ -86,19 +85,13 @@ object CodegenAudit {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val only: Set[String] =
       if (args.length > 1) args(1).split(",").toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE off for the AUDIT only: pre-execution, AdaptiveSparkPlanExec
-      // hides its WholeStageCodegen subtrees from plan.collect, and the
-      // thing being measured — per-expression generated code size — is
-      // identical with and without runtime reoptimization (AQE re-plans
-      // exchanges, never expression codegen)
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
+    // AQE off for the AUDIT only: pre-execution, AdaptiveSparkPlanExec
+    // hides its WholeStageCodegen subtrees from plan.collect, and the
+    // thing being measured — per-expression generated code size — is
+    // identical with and without runtime reoptimization (AQE re-plans
+    // exchanges, never expression codegen)
+    val spark = graft.core.GraftSession.harness("graft-codegen-audit",
+      Seq("spark.sql.adaptive.enabled" -> "false"))
     spark.sparkContext.setLogLevel("ERROR")
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.isEmpty || only.contains(n))

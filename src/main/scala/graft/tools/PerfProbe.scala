@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Measurement harness for the optimization rounds (guide §1): runs
   * named registry queries repeatedly in a Bench-identical session and
   * prints, per run, the wall seconds plus the driver/scheduler shape
@@ -17,22 +15,14 @@ import org.apache.spark.sql.SparkSession
 object PerfProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "3").toInt
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-    // Bench-identical AQE partition-sizing policy (round 19) — applied
-    // BEFORE the A/B overrides below so experiments can flip it back
-    graft.core.GraftSession.tunedShuffleConfs
-      .foreach { case (k, v) => builder.config(k, v) }
-    // extra conf overrides for A/B experiments: "k=v;k=v"
-    sys.env.get("SPARK_GRAFT_PROBE_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
+    // extra conf overrides for A/B experiments: "k=v;k=v", applied after
+    // the Bench-identical session's own confs so they can flip any back
+    val overrides = sys.env.get("SPARK_GRAFT_PROBE_CONF").toSeq
+      .flatMap(_.split(";").filter(_.contains("=")))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+    val spark = graft.core.GraftSession.harness("graft-perfprobe",
+      graft.core.GraftSession.retainAllCodegen +: overrides)
     spark.sparkContext.setLogLevel("WARN")
     val jobs = new java.util.concurrent.atomic.AtomicLong
     val stages = new java.util.concurrent.atomic.AtomicLong
@@ -69,8 +59,8 @@ object PerfProbe {
             f"tasks=${i.numTasks}%5d run=${run / 1000.0}%8.2f cpu=${cpu / 1000.0}%8.2f  ${i.name.take(110)}")
         }
     })
-    val names = args.toSeq.filter(SparkEntryRef.queries.contains)
-    val missing = args.toSeq.filterNot(SparkEntryRef.queries.contains)
+    val names = args.toSeq.filter(graft.SparkEntry.queries.contains)
+    val missing = args.toSeq.filterNot(graft.SparkEntry.queries.contains)
     if (missing.nonEmpty) println(s"UNKNOWN: ${missing.mkString(",")}")
     val classBean = java.lang.management.ManagementFactory.getClassLoadingMXBean
     // base job latency: an empty single-task job, timed after one warmup
@@ -80,7 +70,7 @@ object PerfProbe {
     println(f"BASE empty-job latency = ${(System.nanoTime() - b0) / 1e7 / 10}%.1f ms/job")
     graft.core.SharedFrames.planQueries(names)
     names.foreach { n =>
-      val fn = SparkEntryRef.queries(n)
+      val fn = graft.SparkEntry.queries(n)
       (1 to runs).foreach { i =>
         graft.core.SharedFrames.begin(n)
         val (j0, s0, k0, r0, c0) =
@@ -127,11 +117,4 @@ object PerfProbe {
     }
     spark.stop()
   }
-}
-
-/** Indirection so the probe compiles regardless of SparkEntry's package
-  * shape. */
-private object SparkEntryRef {
-  def queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-    graft.SparkEntry.queries
 }

@@ -1,7 +1,7 @@
 package graft.tools
 
-/** Micro-benchmark sizing the single-task replay admission caps
-  * (`Graph.SingleTaskEdgeCap` / `Graph.LouvainSingleTaskEdgeCap`):
+/** Micro-benchmark sizing the single-task replay admission
+  * (`Graph.replayCap` and its per-family `*PerRowUs` constants):
   * times the EXACT shipped replay bodies (`Graph.louvainReplay`,
   * `kcoreReplay`, `relaxReplay`, `pagerankReplay` — factored out of
   * their mapPartitions closures for this purpose) on synthetic

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev probe: per-sim-bucket recall of the cell-bounded near-dup
@@ -17,13 +17,7 @@ object RouteRecall {
     val dir = args(0)
     val mode = args(1)
     val anchors = args.drop(2).find(_.forall(_.isDigit)).map(_.toInt).getOrElse(500)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.harness("graft-route-recall")
     spark.sparkContext.setLogLevel("WARN")
     val Ann = graft.operators.Ann
     val (q, nVec) = Ann.quantizedCorpus(spark, dir)

@@ -422,6 +422,36 @@ class ExtensionsSpec extends AnyFunSuite {
       .collect()(0).getSeq[org.apache.spark.sql.Row](0)
     assert(topk.map(r => (r.getDouble(0), r.getLong(1))) == Seq((3.0, 30L), (2.0, 20L)))
   }
+
+  test("every graft function resolves from plain SQL on a fresh session after register") {
+    val s = TestSpark.spark.newSession()
+    graft.core.GraftSession.register(s)
+    val calls = Seq(
+      "graft_dot(array(1.0d), array(2.0d))",
+      "graft_shingles('a b c', 2)",
+      "graft_topk(1, struct(1.0d, 1L))",
+      "graft_simhash(array('a', 'b'))",
+      "graft_minhash(array('a b', 'b c'))",
+      "graft_sorted_hashes(array('a', 'b'))",
+      "graft_sorted_intersect(array(1L, 2L), array(2L))",
+      "graft_rademacher(array(0.5d, -0.25d))",
+      "graft_rolling_hashes('some text to fingerprint')",
+      "graft_unit(array(3.0d, 4.0d))",
+      "graft_srp126(array(0.5d, -0.25d))",
+      "graft_winnowed_hashes('some text to fingerprint')",
+      "graft_qunit(array(3.0d, 4.0d))",
+      "graft_spacesaving(2, 7L)",
+      "graft_grams('a b c', 2)")
+    val names = calls.map(_.takeWhile(_ != '('))
+    assert(names.distinct.size == 15)
+    // GraftExtensions injects the same table that register reads
+    assert(graft.functions.sqlFunctions.map(_.name).toSet == names.toSet)
+    val unresolved = calls.filter { c =>
+      try { s.sql(s"SELECT $c").collect(); false }
+      catch { case e: org.apache.spark.sql.AnalysisException => true }
+    }
+    assert(unresolved.isEmpty, s"not callable from SQL: ${unresolved.mkString(", ")}")
+  }
 }
 
 class CentroidSpec extends AnyFunSuite {
