@@ -17,8 +17,9 @@ object Bench {
     //   storage_mb / storage_disk_mb   cached bytes AFTER the query
     //   evicted_parts  cached-RDD partitions dropped from memory
     //                  (partial caching = LRU eviction happened)
-    //   shared_rebuilds  shared frames rebuilt after release (stale
-    //                    consumer list in SharedFrames — drift tell)
+    //   shared_rebuilds  shared frames rebuilt after release (the
+    //                    record SharedFrames learned was incomplete —
+    //                    drift tell)
     // sidecar v2 (round 14): the r13 gap analysis (BENCH_GAP_r14.md)
     // ruled out GC/eviction/rebuilds but had to INFER external host
     // contention. task wall-vs-CPU and /proc/loadavg make it direct:
@@ -115,12 +116,12 @@ object Bench {
     // Default (shared-cache) mode does NOT clear caches between
     // queries — the dedup suite shares one shingle-set build across
     // twelve queries, exactly as a real warehouse session would. But
-    // the working set is BOUNDED structurally (VERDICT r12 #2): the
-    // sorted query list is declared to SharedFrames up front, and
-    // after each query every shared frame whose last planned consumer
-    // has finished is released — peak storage holds one family's
-    // frames, not all ~10 families', so the full 300-query run fits
-    // an 8g driver with no mid-run LRU eviction.
+    // the working set is BOUNDED (VERDICT r12 #2): the sorted query
+    // list is declared to SharedFrames up front, and after each query
+    // every shared frame whose last recorded reader has finished is
+    // released — peak storage holds one family's frames, not all ~10
+    // families', so the full run fits an 8g driver with no mid-run LRU
+    // eviction.
     // SPARK_GRAFT_ISOLATE=1 clears the catalog cache AND the shared-
     // frame registry before EVERY timed run instead: per-query numbers
     // then measure each query's own full cost, comparable round over
@@ -153,9 +154,8 @@ object Bench {
     // freshly generated classes, so early queries execute interpreted
     // while the compiler catches up — and min-of-2 cannot absorb a
     // window longer than one query. The fix frontloads ALL compilation:
-    // every registry query runs once UNTIMED in the same sorted order
-    // (same SharedFrames lifecycle, so the working set stays one
-    // family-sized), then caches/frames are dropped, then an explicit
+    // every registry query runs once UNTIMED in the same sorted order,
+    // then caches/frames are dropped, then an explicit
     // JIT-drain barrier waits for the compiler to go idle before the
     // first timed query. With the 4096-entry codegen cache above, the
     // timed pass reuses the exact classes the warmup compiled — zero
@@ -163,29 +163,21 @@ object Bench {
     // per-query classes_loaded sidecar field counts classes loaded
     // during timed runs (nonzero = regeneration happened anyway), and
     // warmup_s/jit_drain_s land in the run-level JSON.
-    // SPARK_GRAFT_WARMUP=quick restores the r14 8-query warmup for
-    // fast local iteration; SPARK_GRAFT_ONLY skips warmup entirely.
-    val warmupMode = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "full")
+    // The warmup is also the pass in which SharedFrames learns which
+    // query reads which shared frame: as the JVM's first planned pass
+    // it holds every shared frame until it ends, and the timed pass
+    // then releases each frame right after its last recorded reader.
+    // SPARK_GRAFT_ONLY skips warmup entirely.
     var warmupS = -1.0; var jitDrainS = -1.0
     if (only.isEmpty) {
       val w0 = System.nanoTime()
-      if (warmupMode == "quick") {
-        val warmup = Seq("q1_pricing_summary", "window_running_total",
-          "q3_top_orders", "dedup_exact", "ann_lsh_topk", "embedding_kmeans",
-          "triangle_count", "ks_test")
-        warmup.foreach { n =>
-          try SparkEntry.queries(n)(spark, sfDir).count()
-          catch { case scala.util.control.NonFatal(_) => () }
-        }
-      } else {
-        graft.core.SharedFrames.planQueries(names)
-        names.foreach { n =>
-          graft.core.SharedFrames.begin(n)
-          try SparkEntry.queries(n)(spark, sfDir).count()
-          catch { case scala.util.control.NonFatal(_) => () }
-          graft.core.OwnedCaches.release()
-          graft.core.SharedFrames.queryDone(n)
-        }
+      graft.core.SharedFrames.planQueries(names)
+      names.foreach { n =>
+        graft.core.SharedFrames.begin(n)
+        try SparkEntry.queries(n)(spark, sfDir).count()
+        catch { case scala.util.control.NonFatal(_) => () }
+        graft.core.OwnedCaches.release()
+        graft.core.SharedFrames.queryDone(n)
       }
       spark.catalog.clearCache()
       graft.core.SharedFrames.reset()
@@ -230,7 +222,7 @@ object Bench {
         // run then pays its own full cost — per-query numbers stop
         // depending on which queries (and whose leaked caches) ran
         // before (VERDICT r8 #3/#4); session-shared frames stay until
-        // their last planned consumer (released in queryDone below)
+        // their last recorded reader (released in queryDone below)
         graft.core.OwnedCaches.release()
         if (ok) dt else -1.0
       }
@@ -344,7 +336,7 @@ object Bench {
         s""""jit_total_ms":$jitMs,""" +
         s""""head_rerun_n":${head.length},"head_rerun_adopted":$headAdopted,""" +
         s""""warmup_s":${fmt(warmupS)},"jit_drain_s":${fmt(jitDrainS)},""" +
-        s""""warmup_mode":"${esc(if (only.isEmpty) warmupMode else "skipped")}",""" +
+        s""""warmup_mode":"${if (only.isEmpty) "full" else "skipped"}",""" +
         s""""available_processors":${Runtime.getRuntime.availableProcessors},""" +
         s""""sidecar":$sidecarJson,"shared_undeclared":$undeclaredJson""")
     // the full per-query map (+ sidecar) always lands in

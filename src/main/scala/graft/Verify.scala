@@ -27,11 +27,12 @@ object Verify {
       only: Set[String]): Unit = {
     new java.io.File(outDir).mkdirs()
     // sorted order matches Bench (HashMap order reshuffles per build);
-    // operator-owned caches release after each query's write; the
+    // operator-owned caches release after each query's write. Run from
+    // main, this is the JVM's first planned pass: SharedFrames holds the
     // session-shared frames (dedup shingles, support edges, kmeans
-    // assignment, brand baskets) release after their LAST planned
-    // consumer via SharedFrames — the full dump's storage working set
-    // stays one-family-sized instead of growing O(#queries)
+    // assignment, brand baskets) until the dump ends while it records
+    // which query reads which; a later planned pass in the same JVM
+    // releases each after its last recorded reader
     // a failing query must leave a visible trace, not just a stderr
     // line — absence from the artifact otherwise masquerades as
     // "no entry" (this is how 55 failures vanished in round 10)

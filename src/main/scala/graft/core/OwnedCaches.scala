@@ -1,6 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.storage.StorageLevel
 
 /** Registry of operator-OWNED persisted frames (VERDICT r8 #4): an
   * operator that caches a frame purely for its own plan (a register
@@ -39,7 +41,7 @@ object OwnedCaches {
   private val pending =
     new java.util.concurrent.ConcurrentHashMap[Long, java.util.ArrayDeque[DataFrame]]()
   private val pendingRdds =
-    new java.util.concurrent.ConcurrentHashMap[Long, java.util.ArrayDeque[org.apache.spark.rdd.RDD[_]]]()
+    new java.util.concurrent.ConcurrentHashMap[Long, java.util.ArrayDeque[RDD[_]]]()
 
   private def tid: Long = Thread.currentThread().getId
 
@@ -58,10 +60,32 @@ object OwnedCaches {
     * FINAL round's RDD backs the returned frame and must live until
     * the harness materializes it).
     */
-  def ownRdd[T](rdd: org.apache.spark.rdd.RDD[T]): org.apache.spark.rdd.RDD[T] = {
-    pendingRdds.computeIfAbsent(tid, _ => new java.util.ArrayDeque[org.apache.spark.rdd.RDD[_]]())
+  def ownRdd[T](rdd: RDD[T]): RDD[T] = {
+    pendingRdds.computeIfAbsent(tid, _ => new java.util.ArrayDeque[RDD[_]]())
       .add(rdd)
     rdd
+  }
+
+  /** Cut `df`'s Catalyst lineage: persist its rows as an RDD
+    * (MEMORY_AND_DISK), materialize that with a count, and restart the
+    * plan from it. An unrolled loop whose round references the
+    * previous round k times otherwise re-analyzes k^rounds. Returns the
+    * shallow frame and the RDD behind it; the caller decides when the
+    * RDD is released (the round loops unpersist the previous round and
+    * [[ownRdd]] the last).
+    */
+  def sever(df: DataFrame): (DataFrame, RDD[Row]) = {
+    val rdd = df.rdd
+    rdd.persist(StorageLevel.MEMORY_AND_DISK)
+    rdd.count()
+    (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
+  }
+
+  /** [[sever]], with the backing RDD owned until the harness release. */
+  def ownSevered(df: DataFrame): DataFrame = {
+    val (f, rdd) = sever(df)
+    ownRdd(rdd)
+    f
   }
 
   /** Unpersist every owned frame registered by THIS thread since its

@@ -9,42 +9,77 @@ import org.apache.spark.storage.StorageLevel
   * [[OwnedCaches]] intentionally does NOT own. Before round 13 these
   * relied on CacheManager plan-matching and lived until the session
   * died, so the storage working set grew O(#queries) and a long bench
-  * run evicted mid-flight once the heap's storage fraction filled
-  * (VERDICT r12: the 24 g heap bump "did not hold" on the driver
-  * host). This registry bounds the working set STRUCTURALLY instead:
+  * run evicted mid-flight once the heap's storage fraction filled.
+  * This registry bounds the working set instead, and learns from the
+  * harness run itself which query reads which frame — the way a dbt
+  * project derives its model graph from the `ref()` calls models make:
   *
-  *  - Builders call [[get]] with a stable key, the set of consumer
-  *    QUERY names (the `SparkEntry.queries` keys that reach this
-  *    frame, directly or transitively), and a build thunk. The first
-  *    call builds + persists; later calls return the memoized frame
-  *    (same DataFrame object — stronger than plan-matching, and
+  *  - Builders call [[get]] with a stable key and a build thunk. The
+  *    first call builds + persists; later calls return the memoized
+  *    frame (same DataFrame object — stronger than plan-matching, and
   *    release becomes an O(1) unpersist).
-  *  - A harness that runs a KNOWN query list (Bench, Verify) declares
-  *    it via [[planQueries]] and calls [[queryDone]] after each query
-  *    materializes. A frame is unpersisted the moment no still-pending
-  *    planned query is among its consumers — release-on-last-consumer,
-  *    so peak storage holds ONE family's frames, not every family's.
+  *  - '''Record.''' While a harness query is current ([[begin]]), every
+  *    [[get]] adds it to `record(key)`, and so does a [[has]] that
+  *    answers true. The record uses the plain key (no dir / session
+  *    suffix), lives for the JVM, and survives [[planQueries]] and
+  *    [[reset]]; it is never written anywhere.
+  *  - '''Transitive reads.''' While key K is being built, each nested
+  *    [[get]] (or true [[has]]) of K2 adds K2 to K's deps; every later
+  *    read of K also records the reader for K's deps, recursively. So
+  *    a graph query that only touches the memoized support edges still
+  *    counts as a reader of the basket-pair frame they were built from.
+  *  - '''Release.''' A harness that runs a known query list (Bench,
+  *    Verify) declares it via [[planQueries]], which snapshots the keys
+  *    that already have a record, and calls [[queryDone]] after each
+  *    query materializes. A live frame is unpersisted after a query
+  *    when its key was in that snapshot and no pending query is in its
+  *    record — release-on-last-reader, so peak storage holds one
+  *    family's frames, not every family's. Keys with no earlier record
+  *    stay live until the plan's last query finishes, when everything
+  *    is released. So the first planned pass in a JVM (Bench's warmup,
+  *    Verify) holds its frames to its end and every later pass runs
+  *    the learned schedule.
   *  - Without [[planQueries]] (tests, library users) nothing is ever
   *    auto-released: exactly the pre-round-13 session semantics.
   *
-  * Correctness is never at stake: releasing early (a consumer list
-  * that misses a query) only forces a rebuild. Such drift is made
-  * OBSERVABLE, not silent: [[diagnostics]] counts rebuilds-after-
-  * release (`recharges`) and accesses by undeclared queries, and
-  * Bench emits both in its per-query sidecar — a nonzero recharge
-  * column in BENCH_RESULT.json is the tell that a consumer list is
-  * stale.
+  * Correctness is never at stake: releasing early (an incomplete
+  * record) only forces a rebuild. Such drift is OBSERVABLE:
+  * [[diagnostics]] counts rebuilds-after-release and tags reads of a
+  * key whose earlier record did not list the reader (the record then
+  * learns that read too); Bench emits both in its sidecar.
   */
 object SharedFrames {
-  private final case class Entry(df: DataFrame, consumers: Set[String])
+  private final case class Entry(df: DataFrame, key: String)
 
   private val entries = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
   // keys released by the planner that were later rebuilt (drift tell)
   private val buildCounts = new java.util.concurrent.ConcurrentHashMap[String, Int]()
   private val undeclared = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  // plain key -> queries that read it / keys read while building it;
+  // both guarded by the object monitor, never cleared
+  private val record = scala.collection.mutable.HashMap.empty[String, Set[String]]
+  private val deps = scala.collection.mutable.HashMap.empty[String, Set[String]]
+  // the record as the current plan found it
+  private var known = Map.empty[String, Set[String]]
+  // keys whose build thunk is running, innermost first (builds run
+  // under the monitor, so only the building thread ever sees it)
+  private var building = List.empty[String]
   // pending = planned queries not yet done; None = no plan (never release)
   @volatile private var pending: Option[Set[String]] = None
   @volatile private var current: String = ""
+
+  /** Note a read of `key`: a dep of the frame being built, and (inside
+    * a harness query) a reader in the record, transitively.
+    */
+  private def read(key: String): Unit = synchronized {
+    building.headOption.foreach(outer => deps(outer) = deps.getOrElse(outer, Set.empty) + key)
+    def note(k: String, seen: Set[String]): Unit = if (!seen(k)) {
+      if (known.get(k).exists(!_.contains(current))) undeclared.add(s"$k<-$current")
+      record(k) = record.getOrElse(k, Set.empty) + current
+      deps.getOrElse(k, Set.empty).foreach(note(_, seen + k))
+    }
+    if (current.nonEmpty) note(key, Set.empty)
+  }
 
   /** Memoized build of the shared frame `key` for `dir` (the key is
     * qualified with the data dir — tests and bench runs at different
@@ -57,10 +92,9 @@ object SharedFrames {
     * MEMORY_AND_DISK (shared frames are rebuilt-on-release, never
     * silently evicted-and-recomputed — disk spill beats both).
     */
-  def get(spark: SparkSession, key: String, dir: String,
-      consumers: Set[String])(build: => DataFrame): DataFrame = {
+  def get(spark: SparkSession, key: String, dir: String)(build: => DataFrame): DataFrame = {
+    read(key)
     val k = s"$key@$dir@${System.identityHashCode(spark)}"
-    if (current.nonEmpty && !consumers.contains(current)) undeclared.add(s"$k<-$current")
     // identityHashCode is not unique: two LIVE sessions can collide on
     // the key suffix (each entry's DataFrame strongly pins its own
     // session, so a dead-session collision cannot occur — but a live
@@ -95,7 +129,9 @@ object SharedFrames {
       if (e == null) {
         // count > 1 with a plan active = rebuilt after release (drift)
         buildCounts.merge(k, 1, (a: Int, b: Int) => a + b)
-        e = Entry(build.persist(StorageLevel.MEMORY_AND_DISK), consumers)
+        building = key :: building
+        val df = try build finally building = building.tail
+        e = Entry(df.persist(StorageLevel.MEMORY_AND_DISK), key)
         entries.put(k, e)
       }
     }
@@ -111,19 +147,22 @@ object SharedFrames {
     * with an expensive warm path (eager pin jobs that only matter
     * when a BUILD ran) use this to short-circuit (round 19). Purely
     * advisory: a false answer just routes the caller through the full
-    * build-or-lookup path.
+    * build-or-lookup path. A true answer counts as a read of `key`.
     */
   def has(spark: SparkSession, key: String, dir: String): Boolean = {
     val e = entries.get(s"$key@$dir@${System.identityHashCode(spark)}")
-    e != null && (e.df.sparkSession eq spark)
+    val live = e != null && (e.df.sparkSession eq spark)
+    if (live) read(key)
+    live
   }
 
-  /** Declare the query list the harness is about to run (release
-    * bookkeeping starts empty: no key is released until its last
-    * planned consumer finishes). Also resets diagnostics.
+  /** Declare the query list the harness is about to run: snapshot the
+    * keys recorded so far (only those release before the plan ends).
+    * Also resets diagnostics.
     */
   def planQueries(names: Seq[String]): Unit = synchronized {
     pending = Some(names.toSet)
+    known = record.toMap
     buildCounts.clear()
     undeclared.clear()
   }
@@ -134,28 +173,30 @@ object SharedFrames {
   def begin(name: String): Unit = current = name
 
   /** The harness finished (materialized) `name`: drop it from the
-    * pending set and unpersist every frame whose consumers are all
-    * done. No-op when [[planQueries]] was never called.
+    * pending set and unpersist every frame whose key was recorded
+    * before the plan and has no pending reader — or every frame, once
+    * the plan's last query is done. No-op when [[planQueries]] was
+    * never called.
     */
   def queryDone(name: String): Unit = synchronized {
     current = ""
     pending = pending.map(_ - name)
     pending.foreach { p =>
-      val it = entries.entrySet().iterator()
+      val it = entries.values().iterator()
       while (it.hasNext) {
         val e = it.next()
-        if (e.getValue.consumers.intersect(p).isEmpty) {
-          e.getValue.df.unpersist(blocking = false)
+        if (p.isEmpty || (known.contains(e.key) && !record(e.key).exists(p))) {
+          e.df.unpersist(blocking = false)
           it.remove()
         }
       }
     }
   }
 
-  /** Unpersist and forget everything (isolated-bench mode: each query
+  /** Unpersist and forget every frame (isolated-bench mode: each query
     * must pay its own full cost, INCLUDING the shared builds — a
     * memoized-but-unpersisted frame would instead recompute on every
-    * read within one query).
+    * read within one query). The record survives.
     */
   def reset(): Unit = synchronized {
     entries.forEach((_, e) => e.df.unpersist(blocking = false))
@@ -178,7 +219,9 @@ object SharedFrames {
     */
   def onEvict(f: Option[SparkSession] => Unit): Unit = evictHooks.add(f)
 
-  /** (rebuild-after-release count, undeclared-access tags, live keys). */
+  /** (rebuild-after-release count, `key<-query` tags of reads the
+    * plan's snapshot of the record did not list, live keys).
+    */
   def diagnostics: (Int, Seq[String], Seq[String]) = {
     var rebuilds = 0
     buildCounts.forEach((_, n) => if (n > 1) rebuilds += n - 1)
@@ -200,6 +243,7 @@ object SharedFrames {
     */
   private[graft] def clearPlan(): Unit = synchronized {
     pending = None
+    known = Map.empty
     current = ""
   }
 

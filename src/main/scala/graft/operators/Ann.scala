@@ -237,8 +237,7 @@ object Ann {
     * eager severed loop (~0.7 s task CPU) on every call.
     */
   private def embClusterFrame(spark: SparkSession, dir: String): DataFrame =
-    graft.core.SharedFrames.get(spark, "ann.embClusters", dir,
-        Set("dedup_embedding_clusters", "embedding_keep_canonical")) {
+    graft.core.SharedFrames.get(spark, "ann.embClusters", dir) {
       Dedup.labelPropagate(dedupEmbeddingCosine(spark, dir)
           .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
         .select(col("doc_id").as("vec_id"), col("cluster_id"))
@@ -919,40 +918,18 @@ object Ann {
     * quantized corpus it ran over, and the final centroid table (for
     * multi-cell probing).
     */
-  /** The queries that read the shared quantized corpus / final
-    * Lloyd's assignment (directly or via [[knnGraph]]).
-    */
-  private[graft] val KmeansConsumers: Set[String] = Set(
-    "cluster_purity", "embedding_kmeans", "semdedup_prune",
-    "knn_graph", "knn_confusion",
-    // round 15: the cell-bounded near-dup family (dedup_embedding_
-    // cosine/clusters reach the assignment only on their above-cap
-    // scale branch, but a planned run must not release the frames
-    // before they might)
-    "dedup_embedding_lsh", "dedup_embedding_incremental",
-    "embedding_neardup_recall", "dedup_embedding_cosine",
-    "dedup_embedding_clusters", "embedding_keep_canonical",
-    // round 16: the two-level route's level 1 runs through kmeansAssign
-    "ann_twolevel_recall", "twolevel_cell_occupancy",
-    // round 17: forced-k audit faces of the same route
-    "twolevel_ring_contribution", "ann_adaptive_nprobe",
-    // riders of the shared kNN graph (its build reads these frames)
-    "embedding_hubness_audit", "knn_reciprocal_rate",
-    // round 18: the nprobe tuning curve ranks the same centroids
-    "ann_probe_width_curve")
-
   /** The session-shared micro-unit quantized corpus and its count —
     * the input every kmeans-family build reads. Deliberately
     * SESSION-SHARED, not OwnedCaches-owned (the dedup shingle-set
     * rule): five oracled queries reuse this same quantized corpus —
     * owning it made each rebuild the corpus, +5 s across the family
     * in the round-9 bench. Since round 13 the sharing goes through
-    * SharedFrames (released after the family's last planned
-    * consumer). MEMORY_AND_DISK and corpus-bounded.
+    * SharedFrames (released after the family's last recorded
+    * reader). MEMORY_AND_DISK and corpus-bounded.
     */
   private[graft] def quantizedCorpus(spark: SparkSession, dir: String): (DataFrame, Long) = {
     graft.functions.DotProduct.register(spark)
-    val q = graft.core.SharedFrames.get(spark, "ann.kmeans.q", dir, KmeansConsumers) {
+    val q = graft.core.SharedFrames.get(spark, "ann.kmeans.q", dir) {
       Tables(spark, dir).embeddings
         .select(col("vec_id"),
           transform(col("embedding"),
@@ -998,8 +975,7 @@ object Ann {
     // kOverride is a DIFFERENT clustering. Values are unchanged:
     // same deterministic plan.
     val plan = assigned
-    assigned = graft.core.SharedFrames.get(spark, s"ann.kmeans.assign.k$k", dir,
-      KmeansConsumers)(plan)
+    assigned = graft.core.SharedFrames.get(spark, s"ann.kmeans.assign.k$k", dir)(plan)
     // the final centroid table is ALSO memoized (round 15): it is a
     // k-row frame, but as a raw plan it drags the whole unrolled
     // Lloyd's chain into every consumer that broadcasts it — the
@@ -1007,8 +983,7 @@ object Ann {
     // time (~+8 s per isolated 10× query). Same deterministic plan,
     // same values; k in the key for the same reason as the assignment.
     val centPlan = centroids
-    val cent = graft.core.SharedFrames.get(spark, s"ann.kmeans.cent.k$k", dir,
-      KmeansConsumers)(centPlan)
+    val cent = graft.core.SharedFrames.get(spark, s"ann.kmeans.cent.k$k", dir)(centPlan)
     (assigned, q, cent, nVec)
   }
 
@@ -1111,9 +1086,7 @@ object Ann {
     // per timed query). The eager persisted-RDD hand-off pins shallow
     // blocks instead (the forcedTwolevel* convention); the graph is
     // nVec·k rows, so the one-time row conversion is noise.
-    severedShared(spark, "ann.knnGraph", dir,
-        Set("knn_graph", "knn_confusion",
-          "embedding_hubness_audit", "knn_reciprocal_rate")) {
+    severedShared(spark, "ann.knnGraph", dir) {
       knnGraph(spark, dir, kOverride = None, forceShuffle = false)
     }
 
@@ -1295,24 +1268,6 @@ object Ann {
        |        list_dot_product(q.qv, q.qv) - 2*list_dot_product(q.qv, c.cv) + list_dot_product(c.cv, c.cv), c.cl) AS rk
        |    FROM q CROSS JOIN c${KmIters - 1} c) z WHERE rk <= $KnnProbe)""".stripMargin
 
-  /** The near-dup family queries that read the shared multi-probe
-    * frame ([[cellProbes]]).
-    */
-  private[graft] val CellProbeConsumers: Set[String] = Set(
-    "dedup_embedding_lsh", "dedup_embedding_incremental",
-    "embedding_neardup_recall", "dedup_embedding_cosine",
-    "dedup_embedding_clusters", "embedding_keep_canonical",
-    // round 16: the forced-k two-level frames share these keys, and
-    // the kNN-graph family now routes through the same layout
-    // selector (its inline flat probe build had the same O(n·k)
-    // assignment ceiling)
-    "ann_twolevel_recall", "twolevel_cell_occupancy",
-    // round 17: the ring-channel audit and the adaptive-probe audit
-    // replay the same forced-k frames
-    "twolevel_ring_contribution", "ann_adaptive_nprobe",
-    "knn_graph", "knn_confusion",
-    "embedding_hubness_audit", "knn_reciprocal_rate")
-
   /** Every vector's [[KnnProbe]] nearest cells (va, cl) — the
     * multi-probe relation under the whole cell-bounded near-dup
     * family. SESSION-SHARED and persisted: [[kmeansAssign]] memoizes
@@ -1323,7 +1278,7 @@ object Ann {
     * rows — corpus-bounded.
     */
   private[graft] def cellProbes(spark: SparkSession, dir: String): DataFrame =
-    graft.core.SharedFrames.get(spark, "ann.cellProbes", dir, CellProbeConsumers) {
+    graft.core.SharedFrames.get(spark, "ann.cellProbes", dir) {
       val (_, q, centroids, nVec) = kmeansAssign(spark, dir)
       val dist2 = call_function("graft_dot", col("qv"), col("qv")) -
         lit(2.0) * call_function("graft_dot", col("qv"), col("cv")) +
@@ -1443,7 +1398,7 @@ object Ann {
           SF.has(spark, s"ann.hier.ranked.$tag", dir) &&
           SF.has(spark, s"ann.hier.probes.$aTag", dir) &&
           SF.has(spark, s"ann.hier.ring.$aTag", dir)) {
-        def got(key: String) = SF.get(spark, key, dir, CellProbeConsumers)(
+        def got(key: String) = SF.get(spark, key, dir)(
           sys.error(s"$key vanished between has() and get()"))
         return (got(s"ann.hier.assign.$tag"), got(s"ann.hier.probes.$aTag"),
           got(s"ann.hier.ring.$aTag"))
@@ -1472,18 +1427,11 @@ object Ann {
     // betweenness pattern): child_{i} references child_{i-1} three
     // times (assignment join, update carry, anti-join) — unsevered,
     // materialization re-executes the base chain 3^iters times
-    def sever(df: DataFrame): DataFrame = {
-      val rdd = df.rdd
-      rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      rdd.count()
-      graft.core.OwnedCaches.ownRdd(rdd)
-      spark.createDataFrame(rdd, df.schema)
-    }
+    import graft.core.OwnedCaches.{ownSevered => sever}
     // members with their vectors: the one vec_id-keyed shuffle join of
     // the build; session-shared because the level-2 loop reads it
     // iters·2 times and both returned frames descend from it
-    val m = graft.core.SharedFrames.get(spark, s"ann.hier.members.$keyTag", dir,
-        CellProbeConsumers) {
+    val m = graft.core.SharedFrames.get(spark, s"ann.hier.members.$keyTag", dir) {
       // severed (round 19): stored as a shallow LogicalRDD plan — as a
       // cached plan over the kmeans lineage, every warm getter call
       // (and every consumer query) re-paid CacheManager
@@ -1500,8 +1448,7 @@ object Ann {
     // all four family members). On a warm session the builder is
     // skipped entirely and a call costs three O(1) count()s on
     // persisted frames.
-    val childF = graft.core.SharedFrames.get(spark, s"ann.hier.child.$keyTag", dir,
-        CellProbeConsumers) {
+    val childF = graft.core.SharedFrames.get(spark, s"ann.hier.child.$keyTag", dir) {
       val wIn = Window.partitionBy(col("scl")).orderBy(col("vec_id"))
       var child = sever(m.withColumn("rn", row_number().over(wIn))
         .filter(col("rn") <= kc)
@@ -1538,8 +1485,7 @@ object Ann {
     // lineage on the next consumer
     childF.count()
     val cellId = (col("scl") * lit(kc.toLong) + col("ch")).as("cl")
-    val assign = graft.core.SharedFrames.get(spark, s"ann.hier.assign.$keyTag", dir,
-      CellProbeConsumers) {
+    val assign = graft.core.SharedFrames.get(spark, s"ann.hier.assign.$keyTag", dir) {
       // severed (round 19) — same shallow-plan rationale as `m`
       sever(m.join(broadcast(childF), Seq("scl"))
         .select(col("vec_id"), col("scl"), col("ch"),
@@ -1555,8 +1501,7 @@ object Ann {
     // (round 17): the production probe set AND the adaptive boundary
     // ring both derive from it with cheap filters, and the RouteRecall
     // miss-attribution probe reads it directly.
-    val rankedF = graft.core.SharedFrames.get(spark, s"ann.hier.ranked.$keyTag", dir,
-      CellProbeConsumers) {
+    val rankedF = graft.core.SharedFrames.get(spark, s"ann.hier.ranked.$keyTag", dir) {
       val wSup = Window.partitionBy(col("va")).orderBy(col("d2"), col("scl"))
       val supProbes = q.crossJoin(broadcast(supCent.select(col("cl").as("scl"),
           col("cv").as("sv"))))
@@ -1581,8 +1526,7 @@ object Ann {
     // One shared frame because the probe set AND the boundary ring are
     // its two complements (admitted / leftover pool).
     val adaptTag = if (adaptive) s"$keyTag.adp" else keyTag
-    lazy val walkF = graft.core.SharedFrames.get(spark,
-        s"ann.hier.walk.$keyTag", dir, CellProbeConsumers) {
+    lazy val walkF = graft.core.SharedFrames.get(spark, s"ann.hier.walk.$keyTag", dir) {
       // BUDGET-MATCHED target (vs the audit's fixed 4·⌈n/k⌉ probe of
       // the rule): nprobeFor(k) average cells of cumulative mass — the
       // exact expected candidate budget of the fixed width, so on a
@@ -1602,8 +1546,7 @@ object Ann {
           coalesce(sum(col("mass")).over(wBefore), lit(0L)) < lit(target))
         .select(col("va"), col("cl"), col("adm"))
     }
-    val probes = graft.core.SharedFrames.get(spark, s"ann.hier.probes.$adaptTag", dir,
-      CellProbeConsumers) {
+    val probes = graft.core.SharedFrames.get(spark, s"ann.hier.probes.$adaptTag", dir) {
       // corpus-scaled probe width (the recall knob): the fixed face
       // takes nprobeFor(k); the adaptive face admits by cumulative
       // occupancy. Either way the SuperProbe·⌈k/k₂⌉ ranked pool is
@@ -1627,10 +1570,8 @@ object Ann {
     // the build), shared by the near-dup scan and the incremental
     // admission so the iff-equivalence between them holds by
     // construction.
-    val ring = graft.core.SharedFrames.get(spark, s"ann.hier.ring.$adaptTag", dir,
-      CellProbeConsumers) {
-      val sig = graft.core.SharedFrames.get(spark, "ann.srpsig", dir,
-        CellProbeConsumers) {
+    val ring = graft.core.SharedFrames.get(spark, s"ann.hier.ring.$adaptTag", dir) {
+      val sig = graft.core.SharedFrames.get(spark, "ann.srpsig", dir) {
         graft.functions.Srp126.register(spark)
         q.select(col("vec_id"),
           call_function("graft_srp126", col("qv")).as("sg"))
@@ -1680,8 +1621,8 @@ object Ann {
     val (q, nVec) = quantizedCorpus(spark, dir)
     val k = kOpt.getOrElse(kmKFor(nVec))
     hierCellFrames(spark, dir, kOpt) // ensures the shared frame exists
-    graft.core.SharedFrames.get(spark, s"ann.hier.ranked.k$k", dir,
-      CellProbeConsumers)(sys.error("ranked pool must already be built"))
+    graft.core.SharedFrames.get(spark, s"ann.hier.ranked.k$k", dir)(
+      sys.error("ranked pool must already be built"))
   }
 
   /** Layout router for the cell-bounded near-dup family: the (home
@@ -1727,10 +1668,7 @@ object Ann {
     // routed `dedup_embedding_cosine`/`_clusters`) — one cell-bounded
     // scan serves all of them; τ-survivors only, so the persisted
     // frame is near-dup-sized, not candidate-sized
-    graft.core.SharedFrames.get(spark, "ann.cellNearDup", dir,
-        Set("dedup_embedding_lsh", "dedup_embedding_cosine",
-          "dedup_embedding_clusters", "embedding_keep_canonical",
-          "embedding_neardup_recall")) {
+    graft.core.SharedFrames.get(spark, "ann.cellNearDup", dir) {
       // flat (oracle-replayed) quantizer up to TwoLevelK cells, the
       // O(n·√k) two-level hierarchy above — the route's second-stage
       // routing (round 16, VERDICT r15 #3); the verify + canonicalize
@@ -1973,23 +1911,15 @@ object Ann {
     * channel agg. The eager count after get() pins the shallow blocks
     * before the owned backing RDD is released post-query.
     */
-  private def severedShared(spark: SparkSession, key: String, dir: String,
-      consumers: Set[String])(build: => DataFrame): DataFrame = {
-    val f = graft.core.SharedFrames.get(spark, key, dir, consumers) {
-      val df = build
-      val rdd = df.rdd
-      rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      rdd.count()
-      graft.core.OwnedCaches.ownRdd(rdd)
-      spark.createDataFrame(rdd, df.schema)
-    }
+  private def severedShared(spark: SparkSession, key: String, dir: String)(
+      build: => DataFrame): DataFrame = {
+    val f = graft.core.SharedFrames.get(spark, key, dir)(graft.core.OwnedCaches.ownSevered(build))
     f.count()
     f
   }
 
   private[graft] def forcedTwolevelBasePairs(spark: SparkSession, dir: String): DataFrame =
-    severedShared(spark, "ann.twolevel.basePairs", dir,
-        Set("ann_twolevel_recall", "twolevel_ring_contribution")) {
+    severedShared(spark, "ann.twolevel.basePairs", dir) {
       val (q, nVec) = quantizedCorpus(spark, dir)
       val (assign, probes, _) = hierCellFrames(spark, dir, Some(TwoLevelForceK))
       cellBaseVerified(assign, probes, q, nVec).distinct()
@@ -2001,8 +1931,7 @@ object Ann {
     * audits pay).
     */
   private[graft] def forcedTwolevelRingPairs(spark: SparkSession, dir: String): DataFrame =
-    severedShared(spark, "ann.twolevel.ringPairs", dir,
-        Set("ann_twolevel_recall", "twolevel_ring_contribution")) {
+    severedShared(spark, "ann.twolevel.ringPairs", dir) {
       val (q, nVec) = quantizedCorpus(spark, dir)
       val (_, _, ring) = hierCellFrames(spark, dir, Some(TwoLevelForceK))
       ringVerified(ring, q, nVec).distinct()
@@ -3912,8 +3841,7 @@ object Ann {
     * query arithmetic on top of it.
     */
   private def evalRankedTopK(spark: SparkSession, dir: String): DataFrame =
-    graft.core.SharedFrames.get(spark, "ann.evalRanked", dir,
-      Set("ann_ndcg_eval", "ann_mrr_eval")) {
+    graft.core.SharedFrames.get(spark, "ann.evalRanked", dir) {
       graft.functions.DotProduct.register(spark)
       val e = Tables(spark, dir).embeddings
       val q6 = withQ6Norm(e, "uid", "u", "nrm")

@@ -248,14 +248,12 @@ object Commerce {
     * shuffle per run (VERDICT r11 #1: each query own-caching its
     * private copy made the driver bench charge the same build twice,
     * and the charge moved between rounds); a planned harness run
-    * releases it after the second basket query finishes.
+    * releases it after its last recorded reader finishes.
     * |orders|-sized with bounded brand arrays; MEMORY_AND_DISK
     * spills rather than evicts at 100 TB.
     */
   private def brandBaskets(spark: SparkSession, dir: String): DataFrame =
-    graft.core.SharedFrames.get(spark, "commerce.brandBaskets", dir,
-        Set("basket_lift", "basket_triples", "basket_lift_significance",
-          "basket_conviction_rules")) {
+    graft.core.SharedFrames.get(spark, "commerce.brandBaskets", dir) {
       val t = Tables(spark, dir)
       t.lineitem.select(col("l_orderkey"), col("l_partkey"))
         .join(broadcast(t.part.select(col("p_partkey"), col("p_brand"))),

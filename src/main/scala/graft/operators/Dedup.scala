@@ -58,34 +58,6 @@ object Dedup {
       |    ELSE [array_to_string(t, ' ')] END) AS sd
       |  FROM toks)""".stripMargin
 
-  /** The `SparkEntry.queries` names that (directly or transitively)
-    * read the shared shingle frames below — the release-on-last-
-    * consumer sets for [[graft.core.SharedFrames]]. Drift (a new
-    * query consuming a frame without being listed) is harmless for
-    * correctness (the frame rebuilds) and observable: Bench's sidecar
-    * reports rebuild-after-release and undeclared-access counts.
-    */
-  private[graft] val ShingleConsumers: Set[String] = Set(
-    "dedup_ngram_jaccard", "dedup_minhash_lsh", "dedup_clusters",
-    "dedup_keep_canonical", "dedup_method_agreement",
-    "dedup_cross_source_matrix", "dedup_cluster_size_hist",
-    "dedup_incremental", "dedup_threshold_sensitivity",
-    "minhash_estimate_audit", "minhash_band_tune", "lsh_bucket_occupancy",
-    "dedup_shingle_size_sensitivity", "lsh_recall_audit",
-    "dup_ngram_coverage", "capture_recapture_dupes")
-
-  private[graft] val HashedConsumers: Set[String] =
-    ShingleConsumers - "lsh_bucket_occupancy"
-
-  /** The minhash-LSH banded signature frame's consumers: every query
-    * that runs [[dedupMinHashLsh]] itself or through the cluster
-    * family.
-    */
-  private[graft] val LshBandedConsumers: Set[String] = Set(
-    "dedup_minhash_lsh", "dedup_clusters", "dedup_keep_canonical",
-    "dedup_method_agreement", "dedup_cross_source_matrix",
-    "dedup_cluster_size_hist", "capture_recapture_dupes")
-
   /** Distinct 3-gram shingle set per doc via the one-pass
     * TokenShingles expression, cached: every dedup operator reuses
     * this set 3–5 times in one plan (prefix index, signature build,
@@ -94,12 +66,12 @@ object Dedup {
     * [[graft.core.OwnedCaches]]-owned — twelve dedup queries reuse
     * this one frame, exactly as a warehouse session would; since
     * round 13 the sharing goes through [[graft.core.SharedFrames]],
-    * which releases it after its LAST planned consumer instead of
+    * which releases it after its last recorded reader instead of
     * holding it until the session dies.
     */
   private def shingleSets(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.TokenShingles.register(spark)
-    graft.core.SharedFrames.get(spark, "dedup.shingles", dir, ShingleConsumers) {
+    graft.core.SharedFrames.get(spark, "dedup.shingles", dir) {
       Tables(spark, dir).documents
         .select(col("doc_id"), call_function("graft_shingles", col("text"), lit(3)).as("sh"))
     }
@@ -115,7 +87,7 @@ object Dedup {
   private def hashedSets(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.SortedHashes.register(spark)
     graft.functions.SortedIntersectCount.register(spark)
-    graft.core.SharedFrames.get(spark, "dedup.hashed", dir, HashedConsumers) {
+    graft.core.SharedFrames.get(spark, "dedup.hashed", dir) {
       shingleSets(spark, dir)
         .select(col("doc_id"), call_function("graft_sorted_hashes", col("sh")).as("hv"))
     }
@@ -144,8 +116,7 @@ object Dedup {
     val hs = hashedSets(spark, dir)
     // both sides of the candidate self-join read this; shared with
     // dedup_method_agreement's ngram leg
-    val prefix = graft.core.SharedFrames.get(spark, "dedup.ngramPrefix", dir,
-        Set("dedup_ngram_jaccard", "dedup_method_agreement", "lsh_recall_audit")) {
+    val prefix = graft.core.SharedFrames.get(spark, "dedup.ngramPrefix", dir) {
       hs.select(col("doc_id"), size(col("hv")).as("nsh"),
         posexplode(slice(col("hv"), lit(1),
           floor(size(col("hv")) / 2) + 1)).as(Seq("p", "s")))
@@ -211,9 +182,8 @@ object Dedup {
     val sig = sets.select(col("doc_id"),
       call_function("graft_minhash", col("sh")).as("sig"))
     // both sides of the bucket self-join read this; shared across the
-    // six queries that run the LSH path (see LshBandedConsumers)
-    val banded = graft.core.SharedFrames.get(spark, "dedup.lshBanded", dir,
-        LshBandedConsumers) {
+    // queries that run the LSH path
+    val banded = graft.core.SharedFrames.get(spark, "dedup.lshBanded", dir) {
       sig.select(col("doc_id"),
         posexplode(transform(sequence(lit(0), lit(NumBands - 1)),
           b => concat_ws(",",
@@ -758,13 +728,11 @@ object Dedup {
     * once per session for the pair of audits instead of twice each.
     */
   private[graft] def minhashPairsShared(spark: SparkSession, dir: String): DataFrame =
-    graft.core.SharedFrames.get(spark, "minhashPairs", dir,
-      Set("capture_recapture_dupes", "dedup_method_agreement"))(
+    graft.core.SharedFrames.get(spark, "minhashPairs", dir)(
       dedupMinHashLsh(spark, dir).select(col("doc_a"), col("doc_b")))
 
   private[graft] def simhashPairsShared(spark: SparkSession, dir: String): DataFrame =
-    graft.core.SharedFrames.get(spark, "simhashPairs", dir,
-      Set("capture_recapture_dupes", "dedup_method_agreement"))(
+    graft.core.SharedFrames.get(spark, "simhashPairs", dir)(
       dedupSimHash(spark, dir).select(col("doc_a"), col("doc_b")))
 
   def dedupMethodAgreement(spark: SparkSession, dir: String): DataFrame = {

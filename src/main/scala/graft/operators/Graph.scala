@@ -112,18 +112,13 @@ object Graph {
     * consumes it directly and the three [[custSuppEdges]] centralities
     * derive the encoded symmetric closure from it map-side, so the
     * orders⋈lineitem shuffle and the distinct run ONCE per session
-    * instead of four times. Release rides SharedFrames'
-    * last-planned-consumer accounting, the established shared-family
-    * lifecycle.
+    * instead of four times (round 19: `attribute_assortativity` reads
+    * the identical frame). Release rides SharedFrames' recorded
+    * last-reader accounting, the established shared-family lifecycle.
     */
-  private[graft] val CustSuppPairConsumers =
-    Set("pagerank_topk", "personalized_pagerank", "katz_topk", "hits_scores",
-      // round 19: the attribute-mixing audit reads the identical
-      // distinct (customer, supplier) pair frame
-      "attribute_assortativity")
 
   private[graft] def custSuppPairs(spark: SparkSession, dir: String): DataFrame =
-    graft.core.SharedFrames.get(spark, "custSuppPairs", dir, CustSuppPairConsumers) {
+    graft.core.SharedFrames.get(spark, "custSuppPairs", dir) {
       val t = Tables(spark, dir)
       t.orders.select(col("o_orderkey"), col("o_custkey"))
         .join(t.lineitem.select(col("l_orderkey"), col("l_suppkey")),
@@ -158,17 +153,15 @@ object Graph {
     * identical across the three centralities. katz reads the flat
     * frame's (src, dst) projection.
     */
-  private[graft] val CustSuppFlatConsumers =
-    Set("pagerank_topk", "personalized_pagerank", "katz_topk")
 
   private[graft] def custSuppDeg(spark: SparkSession, dir: String): DataFrame =
-    graft.core.SharedFrames.get(spark, "custSuppDeg", dir, CustSuppFlatConsumers) {
+    graft.core.SharedFrames.get(spark, "custSuppDeg", dir) {
       custSuppEdges(spark, dir)
         .groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
     }
 
   private[graft] def custSuppEdgesFlat(spark: SparkSession, dir: String): DataFrame =
-    graft.core.SharedFrames.get(spark, "custSuppEdgesFlat", dir, CustSuppFlatConsumers) {
+    graft.core.SharedFrames.get(spark, "custSuppEdgesFlat", dir) {
       custSuppEdges(spark, dir)
         .join(custSuppDeg(spark, dir).toDF("src", "deg_src"), "src")
         .select(col("src"), col("dst"), col("deg_src"))
@@ -656,25 +649,6 @@ object Graph {
     * CacheManager plan-matches this one frame across all of them
     * (support-filtered edge count is tiny — thousands of rows).
     */
-  /** The graph-family queries that read the shared support graph —
-    * [[graft.core.SharedFrames]] releases it after the LAST of these
-    * finishes in a planned harness run.
-    */
-  private[graft] val SupportEdgeConsumers: Set[String] = Set(
-    "triangle_count", "bfs_hops", "degree_profile",
-    "connected_components", "kcore_nodes", "recursive_reachability",
-    "link_prediction_jaccard", "shortest_path_bf", "local_clustering",
-    "graph_modularity", "community_louvain", "degree_assortativity",
-    "link_prediction_resource_alloc", "rich_club_coefficient",
-    "hub_closeness_profile", "adamic_adar_links", "betweenness_sample",
-    "graph_eccentricity_sample",
-    // round 17: the 4-cycle census reuses the same wedge machinery
-    "four_cycle_count",
-    // round 18: the degree-cap route's dropped-hub audit
-    "wedge_cap_audit",
-    // round 18 wave 4: rectangle clustering + integer power iteration
-    "four_cycle_clustering", "eigenvector_centrality")
-
   /** Ordered in-basket co-purchase pair counts (p1 ≠ p2, BOTH
     * directions) — the Σ basket² build the whole co-purchase family
     * rests on, now session-shared ONE level below [[supportEdges]]
@@ -686,11 +660,8 @@ object Graph {
     * the recommenders' distinct-items formulation, so the counts are
     * the same frame both families already computed.
     */
-  private[graft] val BasketPairConsumers: Set[String] =
-    SupportEdgeConsumers ++ Set("cooccur_recs", "itemitem_cf", "recs_coverage_profile")
-
   private[graft] def basketPairCounts(spark: SparkSession, dir: String): DataFrame =
-    graft.core.SharedFrames.get(spark, "graph.basketPairCounts", dir, BasketPairConsumers) {
+    graft.core.SharedFrames.get(spark, "graph.basketPairCounts", dir) {
       Tables(spark, dir).lineitem
         .groupBy(col("l_orderkey"))
         .agg(collect_set(col("l_partkey")).as("basket"))
@@ -710,7 +681,7 @@ object Graph {
     }
 
   private def supportEdges(spark: SparkSession, dir: String): DataFrame =
-    graft.core.SharedFrames.get(spark, "graph.supportEdges", dir, SupportEdgeConsumers) {
+    graft.core.SharedFrames.get(spark, "graph.supportEdges", dir) {
       // each order contributes exactly once per ordered pair, so the
       // bidirectional count at p1 < p2 IS the unordered support count
       basketPairCounts(spark, dir)
@@ -724,7 +695,7 @@ object Graph {
     * twice per timed query. One persisted frame serves them all.
     */
   private[graft] def symEdges(spark: SparkSession, dir: String): DataFrame =
-    graft.core.SharedFrames.get(spark, "graph.symEdges", dir, SupportEdgeConsumers) {
+    graft.core.SharedFrames.get(spark, "graph.symEdges", dir) {
       val und = supportEdges(spark, dir).select(col("p1"), col("p2"))
       und.select(col("p1").as("src"), col("p2").as("dst"))
         .union(und.select(col("p2").as("src"), col("p1").as("dst")))
@@ -735,7 +706,7 @@ object Graph {
     * it is one node-grain aggregate per session.
     */
   private[graft] def supportDeg(spark: SparkSession, dir: String): DataFrame =
-    graft.core.SharedFrames.get(spark, "graph.supportDeg", dir, SupportEdgeConsumers) {
+    graft.core.SharedFrames.get(spark, "graph.supportDeg", dir) {
       symEdges(spark, dir).groupBy(col("src").as("p")).agg(count(lit(1)).as("deg"))
     }
 
@@ -747,11 +718,9 @@ object Graph {
     * three; the forced-loop test path still calls [[ccLabels]]
     * directly.
     */
-  private[graft] val CcLabelConsumers: Set[String] =
-    Set("connected_components", "graph_modularity", "community_louvain")
 
   private[graft] def ccLabelsShared(spark: SparkSession, dir: String): DataFrame =
-    graft.core.SharedFrames.get(spark, "graph.ccLabels", dir, CcLabelConsumers) {
+    graft.core.SharedFrames.get(spark, "graph.ccLabels", dir) {
       ccLabels(spark, dir, CcRounds)
     }
 
@@ -813,13 +782,11 @@ object Graph {
           .select(col("dst").as("p"), (col("d") + col("w")).as("d"))
         val next = dist.unionByName(relax)
           .groupBy(col("p")).agg(min(col("d")).as("d"))
-        val rdd = next.rdd
-        rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        rdd.count()
+        val (severed, rdd) = graft.core.OwnedCaches.sever(next)
         if (prevRdd != null) prevRdd.unpersist(blocking = false)
         prevRdd = rdd
         if (r == rounds) graft.core.OwnedCaches.ownRdd(rdd)
-        dist = spark.createDataFrame(rdd, next.schema)
+        dist = severed
       }
       dist
     }
@@ -1167,13 +1134,11 @@ object Graph {
           .agg(count(lit(1)).as("deg"))
           .filter(col("deg") >= KCoreK)
           .select(col("p"))
-        val rdd = next.rdd
-        rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        rdd.count()
+        val (severed, rdd) = graft.core.OwnedCaches.sever(next)
         if (prevRdd != null) prevRdd.unpersist(blocking = false)
         prevRdd = rdd
         if (r == rounds) graft.core.OwnedCaches.ownRdd(rdd)
-        nodes = spark.createDataFrame(rdd, next.schema)
+        nodes = severed
       }
       cached
         .join(nodes.select(col("p").as("sa")), col("src") === col("sa"))
@@ -1385,12 +1350,8 @@ object Graph {
     * ignores the joined columns entirely; every center w is an edge
     * source, so the inner contribution join drops no wedge row.
     */
-  private[graft] val WedgeStatsConsumers: Set[String] = Set(
-    "link_prediction_jaccard", "link_prediction_resource_alloc",
-    "adamic_adar_links", "four_cycle_count", "four_cycle_clustering")
-
   private[graft] def wedgeStats(spark: SparkSession, dir: String): DataFrame =
-    graft.core.SharedFrames.get(spark, "graph.wedgeStats", dir, WedgeStatsConsumers) {
+    graft.core.SharedFrames.get(spark, "graph.wedgeStats", dir) {
       val contrib = supportDeg(spark, dir)
         .withColumn("dw", col("deg"))
         .withColumn("__y", expr(AaY))
@@ -1959,12 +1920,11 @@ object Graph {
       var converged = false
       for (_ <- 1 to LouvainRounds if !converged) {
         val next = louvainMergeRound(und, deg, m, lab)
-        val rdd = next.rdd
-        rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        rdd.count() // materialize before releasing the previous round
+        // materialized before the previous round is released
+        val (severed, rdd) = graft.core.OwnedCaches.sever(next)
         if (prevRdd != null) prevRdd.unpersist()
         prevRdd = rdd
-        lab = spark.createDataFrame(rdd, next.schema)
+        lab = severed
         val nLabels = lab.agg(countDistinct(col("lbl"))).head().getLong(0)
         converged = nLabels == prevLabels
         prevLabels = nLabels
@@ -2816,13 +2776,7 @@ object Graph {
     // visited set, so an unsevered chain re-analyzes 2^levels —
     // materialize each tiny (sources × reach) frame to a persisted
     // RDD and restart the lineage from it
-    def sever(df: DataFrame): DataFrame = {
-      val rdd = df.rdd
-      rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      rdd.count()
-      graft.core.OwnedCaches.ownRdd(rdd)
-      spark.createDataFrame(rdd, df.schema)
-    }
+    import graft.core.OwnedCaches.{ownSevered => sever}
     val f0 = sever(srcs.select(col("s"), col("s").as("v"), lit(1L).as("sig")))
     // forward: exact path counts per level, visited-set anti-joins
     val fronts = scala.collection.mutable.ArrayBuffer(f0)

@@ -3563,8 +3563,7 @@ object Stats {
     * pass and user-keyed join run once; each eval is a ≤10-row spine
     * on top. */
   private def rocBanded(spark: SparkSession, dir: String): DataFrame =
-    graft.core.SharedFrames.get(spark, "stats.rocBanded", dir,
-      Set("roc_curve_points", "pr_auc_eval")) {
+    graft.core.SharedFrames.get(spark, "stats.rocBanded", dir) {
       val ev = Tables(spark, dir).events
       val mid = ev.agg(expr("CAST(floor((min(ts_us) + max(ts_us)) / 2.0) AS BIGINT)").as("mid"))
       val ud = ev.crossJoin(broadcast(mid))

@@ -467,8 +467,7 @@ object TextAnalysis {
     * re-running the corpus tokenization on every read.
     */
   private def termFreqFrame(spark: SparkSession, dir: String): DataFrame =
-    graft.core.SharedFrames.get(spark, "text.termFreq", dir,
-        Set("tfidf_topk", "bm25_topk", "term_cooccur_lift")) {
+    graft.core.SharedFrames.get(spark, "text.termFreq", dir) {
       Tables(spark, dir).documents
         .select(col("doc_id"), explode(normTokens(col("text"))).as("term"))
         .groupBy(col("doc_id"), col("term"))
@@ -1919,8 +1918,7 @@ object TextAnalysis {
     * corpus tokenization/hash pass now runs once per session.
     */
   private def bigramHashBase(spark: SparkSession, dir: String): DataFrame =
-    graft.core.SharedFrames.get(spark, "text.bigramHashBase", dir,
-        Set("bigram_perplexity_by_source", "perplexity_bucket_filter")) {
+    graft.core.SharedFrames.get(spark, "text.bigramHashBase", dir) {
       graft.functions.TokenGrams.register(spark)
       val bucket = (conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
         .cast("int") % 100)

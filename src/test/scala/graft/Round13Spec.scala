@@ -4,95 +4,14 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-13 pins: the SharedFrames release-on-last-consumer lifecycle
-  * (the structural bound on the session-shared cache working set —
-  * VERDICT r12 #2) and the globalRankCumsum two-level prefix sum the
-  * customer-grain window rewrites ride on (VERDICT r12 #1/#3).
+/** Round-13 pins: the globalRankCumsum two-level prefix sum the
+  * customer-grain window rewrites ride on (VERDICT r12 #1/#3), and the
+  * round's new queries. The SharedFrames lifecycle tests live in
+  * SharedFramesSpec.
   */
 class Round13Spec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val sf = TestSpark.sf
-
-  test("SharedFrames releases a frame exactly after its last planned consumer") {
-    import graft.core.SharedFrames
-    import spark.implicits._
-    SharedFrames.planQueries(Seq("qa", "qb", "qc"))
-    try {
-      var builds = 0
-      def frame = SharedFrames.get(spark, "t13.lifecycle", "mem", Set("qa", "qc")) {
-        builds += 1
-        (1 to 10).toDF("x")
-      }
-      val df = frame
-      df.count()
-      assert(builds == 1 && df.storageLevel.useMemory)
-      SharedFrames.begin("qa"); SharedFrames.queryDone("qa")
-      assert(df.storageLevel.useMemory, "qc still pending: frame must survive qa")
-      SharedFrames.begin("qb"); SharedFrames.queryDone("qb")
-      assert(df.storageLevel.useMemory, "qb is not a consumer: no release")
-      // memoization: a second get returns the SAME frame, no rebuild
-      assert(frame eq df)
-      assert(builds == 1)
-      SharedFrames.begin("qc"); SharedFrames.queryDone("qc")
-      assert(df.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
-        "last planned consumer finished: frame must be unpersisted")
-      // a rebuild after release is counted — the drift tell Bench
-      // emits per query as shared_rebuilds in the sidecar
-      val df2 = frame
-      assert(builds == 2)
-      assert(SharedFrames.diagnostics._1 >= 1, "rebuild-after-release must be observable")
-      df2.unpersist()
-    } finally SharedFrames.clearPlan()
-  }
-
-  test("SharedFrames without a plan keeps library session semantics (no auto-release)") {
-    import graft.core.SharedFrames
-    import spark.implicits._
-    SharedFrames.clearPlan()
-    val df = SharedFrames.get(spark, "t13.noplan", "mem", Set("qa")) {
-      (1 to 5).toDF("x")
-    }
-    df.count()
-    SharedFrames.begin("qa"); SharedFrames.queryDone("qa")
-    assert(df.storageLevel.useMemory,
-      "without planQueries, queryDone must not release anything")
-    df.unpersist()
-  }
-
-  test("SharedFrames flags an undeclared consumer instead of failing") {
-    import graft.core.SharedFrames
-    import spark.implicits._
-    SharedFrames.planQueries(Seq("declared", "stranger"))
-    try {
-      SharedFrames.begin("stranger")
-      val df = SharedFrames.get(spark, "t13.undeclared", "mem", Set("declared")) {
-        (1 to 5).toDF("x")
-      }
-      df.count() // works — drift is a diagnostic, never a failure
-      val (_, und, _) = SharedFrames.diagnostics
-      assert(und.exists(_.contains("t13.undeclared")), s"expected drift tag, got $und")
-      SharedFrames.queryDone("stranger")
-      SharedFrames.begin("declared"); SharedFrames.queryDone("declared")
-      assert(df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-    } finally SharedFrames.clearPlan()
-  }
-
-  test("declared consumer lists name real SparkEntry queries") {
-    // a typo'd or stale name in a consumer set would silently turn
-    // release-on-last-consumer into release-too-early (rebuilds) —
-    // every declared consumer must exist in the registry
-    val qs = SparkEntry.queries.keySet
-    for ((family, consumers) <- Seq(
-        "dedup.shingles" -> graft.operators.Dedup.ShingleConsumers,
-        "dedup.hashed" -> graft.operators.Dedup.HashedConsumers,
-        "dedup.lshBanded" -> graft.operators.Dedup.LshBandedConsumers,
-        "graph.supportEdges" -> graft.operators.Graph.SupportEdgeConsumers,
-        "ann.kmeans" -> graft.operators.Ann.KmeansConsumers,
-        "ann.cellProbes" -> graft.operators.Ann.CellProbeConsumers)) {
-      val unknown = consumers.diff(qs)
-      assert(unknown.isEmpty, s"$family declares non-existent queries: $unknown")
-    }
-  }
 
   test("graft_unit normalizes in one pass and matches the declarative form bit-for-bit") {
     import spark.implicits._

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** Round-15 hardening pins (engine-review findings): the custom join
   * execs treat NULL positional keys with SQL semantics instead of
   * silently reading 0, the unit-vector expressions reject non-float/
-  * double element arrays with a typed error, and SharedFrames never
-  * hands a memoized frame to a different session.
+  * double element arrays with a typed error. (The SharedFrames
+  * session-collision pin lives in SharedFramesSpec.)
   */
 class Round15dSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -69,20 +69,5 @@ class Round15dSpec extends AnyFunSuite {
     val ok = Seq((1L, Seq(3.0, 4.0))).toDF("id", "v")
       .select(call_function("graft_unit", col("v"))).collect()
     assert(ok.nonEmpty)
-  }
-
-  test("SharedFrames: a key collision with a DIFFERENT live session rebuilds, never cross-serves") {
-    val s2 = spark.newSession()
-    // same key text except the session suffix differs by identity —
-    // manufacture the cross-session case by asking both sessions for
-    // the same logical key and checking each gets ITS OWN frame
-    val f1 = graft.core.SharedFrames.get(spark, "r15d.test", "dir", Set("x")) {
-      spark.range(3).toDF("a")
-    }
-    val f2 = graft.core.SharedFrames.get(s2, "r15d.test", "dir", Set("x")) {
-      s2.range(3).toDF("a")
-    }
-    assert(f1.sparkSession eq spark)
-    assert(f2.sparkSession eq s2, "a frame must belong to the session that asked")
   }
 }

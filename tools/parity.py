@@ -9,8 +9,12 @@ For each query: load Spark's parquet result and run the oracle SQL in
 DuckDB over the same testdata parquet, sort columns by name, sort rows,
 compare values cell-by-cell (decimals compared numerically, floats to
 9 significant digits).
+
+DuckDB runs with an explicit memory limit (half of the host's memory,
+at most 8 GiB) and a spill directory under /tmp, so an oversized oracle
+spills or fails inside DuckDB instead of starving the host.
 """
-import sys, json, glob, math
+import sys, json, glob, math, shutil, tempfile
 import duckdb
 import pyarrow.parquet as pq
 import pandas as pd
@@ -34,8 +38,24 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
     return out.sort_values(by=list(out.columns), kind="mergesort").reset_index(drop=True)
 
 
+def memory_limit_mib() -> int:
+    """Half of MemTotal, at most 8 GiB."""
+    with open("/proc/meminfo") as f:
+        kib = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+    return max(256, min(kib // 2048, 8 * 1024))
+
+
 def main(out_dir: str, sf_dir: str) -> int:
-    con = duckdb.connect()
+    spill = tempfile.mkdtemp(prefix="parity-duckdb-", dir="/tmp")
+    try:
+        con = duckdb.connect(config={"memory_limit": f"{memory_limit_mib()}MiB",
+                                     "temp_directory": spill})
+        return compare(con, out_dir, sf_dir)
+    finally:
+        shutil.rmtree(spill, ignore_errors=True)
+
+
+def compare(con, out_dir: str, sf_dir: str) -> int:
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
