@@ -33,12 +33,12 @@ import org.apache.spark.storage.StorageLevel
   *    that already have a record, and calls [[queryDone]] after each
   *    query materializes. A live frame is unpersisted after a query
   *    when its key was in that snapshot and no pending query is in its
-  *    record — release-on-last-reader, so peak storage holds one
-  *    family's frames, not every family's. Keys with no earlier record
+  *    record — release-on-last-reader. Keys with no earlier record
   *    stay live until the plan's last query finishes, when everything
   *    is released. So the first planned pass in a JVM (Bench's warmup,
-  *    Verify) holds its frames to its end and every later pass runs
-  *    the learned schedule.
+  *    Verify) holds every frame it builds to its end, and only later
+  *    passes run the learned schedule, whose peak storage holds one
+  *    family's frames, not every family's.
   *  - Without [[planQueries]] (tests, library users) nothing is ever
   *    auto-released: exactly the pre-round-13 session semantics.
   *

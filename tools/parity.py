@@ -10,9 +10,12 @@ DuckDB over the same testdata parquet, sort columns by name, sort rows,
 compare values cell-by-cell (decimals compared numerically, floats to
 9 significant digits).
 
-DuckDB runs with an explicit memory limit (half of the host's memory,
-at most 8 GiB) and a spill directory under /tmp, so an oversized oracle
-spills or fails inside DuckDB instead of starving the host.
+DuckDB runs with an explicit memory limit and a spill directory under
+/tmp. The limit is DuckDB's own default (80 % of MemTotal) unless the
+memory free at start, less a 2 GiB reserve, is smaller: on an idle host
+every oracle gets the memory it had before, and next to a resident JVM
+an oversized oracle spills or fails inside DuckDB instead of starving
+the host.
 """
 import sys, json, glob, math, shutil, tempfile
 import duckdb
@@ -39,16 +42,18 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def memory_limit_mib() -> int:
-    """Half of MemTotal, at most 8 GiB."""
+    """80 % of MemTotal, or MemAvailable less 2 GiB if that is smaller."""
     with open("/proc/meminfo") as f:
-        kib = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
-    return max(256, min(kib // 2048, 8 * 1024))
+        kib = {l.split(":")[0]: int(l.split()[1]) for l in f}
+    return max(1024, min(kib["MemTotal"] * 4 // 5, kib["MemAvailable"] - 2 * 1024 ** 2) // 1024)
 
 
 def main(out_dir: str, sf_dir: str) -> int:
     spill = tempfile.mkdtemp(prefix="parity-duckdb-", dir="/tmp")
+    limit = memory_limit_mib()
+    print(f"duckdb memory_limit {limit} MiB", file=sys.stderr)
     try:
-        con = duckdb.connect(config={"memory_limit": f"{memory_limit_mib()}MiB",
+        con = duckdb.connect(config={"memory_limit": f"{limit}MiB",
                                      "temp_directory": spill})
         return compare(con, out_dir, sf_dir)
     finally:
